@@ -7,9 +7,11 @@ Usage: python3 scripts/bench_duckdb.py <sfDir> <oracle_sql.json> [out.json]
 oracle_sql.json is the dump graft.Verify writes to <outDir>/oracle_sql.json
 (statement text is data-dir independent). One warmup pass, two timed
 passes, min per query; prints one JSON line compatible with the Spark
-bench's shape.
+bench's shape. DuckDB runs on this process's CPU count, so a pairing with a
+Spark run at SPARK_GRAFT_CPUS=<same count> is at matched threads.
 """
 import json
+import os
 import sys
 import time
 
@@ -19,7 +21,7 @@ import duckdb
 def main(sf_dir, sql_path, out_path=None):
     sql = json.load(open(sql_path))
     con = duckdb.connect()
-    con.execute("PRAGMA threads=32")
+    con.execute(f"PRAGMA threads={len(os.sched_getaffinity(0))}")
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
         con.execute(

@@ -28,65 +28,16 @@ import scala.util.control.NonFatal
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    System.setProperty("graft.cacheTables", "true")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // reducer count: HALF the cores, measured fastest across the catalog
-    // (32 reducers on local[32] pay more per-task scheduling than the
-    // extra width buys at sf0.1; explode-amplified stages re-widen
-    // explicitly — see Dedup.pairsFromGroups). On a real cluster this is
-    // per-job tuned to data volume; AQE still coalesces below this.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.max(1, cpus.toInt / 2).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // AQE decides broadcasts from ACTUAL runtime sizes, so a higher
-      // ceiling is safe at any scale (it can never broadcast something
-      // big); 64 MB lets the mid-size build sides of the pair pipelines
-      // skip a shuffle leg locally, same as a tuned cluster would run
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_ABJT", "67108864"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the generated-class cache defaults to 100 entries; a catalog of ~60
-      // distinct queries compiles several codegen stages each, so at the
-      // default size every re-execution evicts, re-runs janino, AND loses
-      // the JIT state of the previous (now-discarded) class. Any long-lived
-      // app serving a query catalog wants this sized to its working set.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // ObjectHashAggregate (every TypedImperativeAggregate: MinByOrd,
-      // the merge fold, collect_set over arrays) falls back to FULL
-      // SORT-BASED aggregation after only 128 distinct keys per
-      // partition — the default turns the a1/a1b rollups into external
-      // sorts of the unreduced input at sf10 (measured: a1b 57→36 s).
-      // 128k keys/partition × O(100 B) buffers is a few MB of executor
-      // memory — the right trade anywhere short of billions of groups
-      // per partition.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "131072"))
-      // streaming state/commit logs on tmpfs: micro-batch commit latency is
-      // filesystem fsync, not plan work (a cluster would put this on fast
-      // shared storage); falls back to the default temp dir if absent
-      .config("spark.sql.streaming.checkpointLocation",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT",
-          (if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-           else System.getProperty("java.io.tmpdir")) +
-            s"/graft-bench-ckpt-${java.util.UUID.randomUUID()}"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(cpus.toInt)
 
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     // pair-graph cache posture for this run, recorded in the output JSON:
-    // per-query timings share the artifact only when explicitly asked
-    // (SPARK_GRAFT_PAIR_SHARED=1) or when a disk cache dir is configured
-    val pairShared = sys.env.get("SPARK_GRAFT_PAIR_SHARED").contains("1")
-    val pairMode =
-      sys.env.get("SPARK_GRAFT_PAIR_CACHE").map(d => s"disk:$d").getOrElse(
-        if (pairShared) "in_process_shared" else "per_query_cleared")
+    // per-query timings share the artifact only when a disk cache dir is
+    // configured
+    val pairMode = sys.env.get("SPARK_GRAFT_PAIR_CACHE")
+      .map(d => s"disk:$d").getOrElse("per_query_cleared")
 
     def force(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
@@ -125,12 +76,9 @@ object Bench {
         // process — intended PIPELINE semantics (PipelineBench measures
         // them), but in a per-query bench it would time consumption on
         // one side while the oracle recomputes on the other (r10
-        // ADVICE). Cleared between timed queries unless the caller asks
-        // for pipeline mode explicitly; either way the mode rides in the
+        // ADVICE). Cleared between timed queries; the mode rides in the
         // output JSON.
-        if (!pairShared) { graft.operators.PairGraph.clearInProcess()
-          graft.operators.SemanticPairGraph.clearInProcess()
-          graft.operators.GroupStats.clearInProcess() }
+        clearArtifacts()
         // Outside the timed window: drop the query's lineage so the
         // ContextCleaner can reap its shuffle files and localCheckpoint
         // blocks. Shuffle files live until their ShuffleDependency is
@@ -178,9 +126,7 @@ object Bench {
       names.foreach(n => try force(n) catch { case NonFatal(_) => () })
     // the warmup pass populated the pair-graph cache; timed passes must
     // start from the declared posture
-    if (!pairShared) { graft.operators.PairGraph.clearInProcess()
-      graft.operators.SemanticPairGraph.clearInProcess()
-      graft.operators.GroupStats.clearInProcess() }
+    clearArtifacts()
     val pass1 = names.map(n => n -> timed(n)).toMap
     val results = names.map { n =>
       val a = pass1(n)
@@ -225,10 +171,74 @@ object Bench {
     steady.foreach { case (detail, _) =>
       println(s"""{"metric":"stream_steady","n_batches":$steadyN,"shapes":$detail}""")
     }
+    stop(spark)
+    // LAST stdout line, after all Spark shutdown noise: compact totals that
+    // always fit a 2000-char tail capture regardless of catalog size; the
+    // steady medians ride here so the round artifact's `parsed` carries them
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"streaming_steady":$steadyJson,"pair_graph_cache":"$pairMode","n_failed":${failed.size},"failed":$failedJson,"sf":"$sfDir"}""")
+    // a bench with failed queries is a failed bench — exit nonzero so
+    // automation can't record it as a healthy round (round-6 lesson)
+    if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** The session every bench main times under (Bench, BenchOne, PlanDump,
+    * PipelineBench): one definition, so a plan dumped or timed by any of
+    * them is the plan the catalog bench runs. Base tables are cached for
+    * the process (graft.cacheTables). Stop it with [[stop]]. */
+  def session(cpus: Int): SparkSession = {
+    System.setProperty("graft.cacheTables", "true")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      // reducer count: HALF the cores, measured fastest across the catalog
+      // (32 reducers on local[32] pay more per-task scheduling than the
+      // extra width buys at sf0.1; explode-amplified stages re-widen
+      // explicitly — see Dedup.pairsFromGroups). On a real cluster this is
+      // per-job tuned to data volume; AQE still coalesces below this.
+      .config("spark.sql.shuffle.partitions", math.max(1, cpus / 2))
+      .config("spark.sql.adaptive.enabled", "true")
+      // AQE decides broadcasts from ACTUAL runtime sizes, so a higher
+      // ceiling is safe at any scale (it can never broadcast something
+      // big); 64 MB lets the mid-size build sides of the pair pipelines
+      // skip a shuffle leg locally, same as a tuned cluster would run
+      .config("spark.sql.autoBroadcastJoinThreshold", "67108864")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // the generated-class cache defaults to 100 entries; a catalog of ~60
+      // distinct queries compiles several codegen stages each, so at the
+      // default size every re-execution evicts, re-runs janino, AND loses
+      // the JIT state of the previous (now-discarded) class. Any long-lived
+      // app serving a query catalog wants this sized to its working set.
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // ObjectHashAggregate (every TypedImperativeAggregate: MinByOrd,
+      // the merge fold, collect_set over arrays) falls back to FULL
+      // SORT-BASED aggregation after only 128 distinct keys per
+      // partition — the default turns the a1/a1b rollups into external
+      // sorts of the unreduced input at sf10 (measured: a1b 57→36 s).
+      // 128k keys/partition × O(100 B) buffers is a few MB of executor
+      // memory — the right trade anywhere short of billions of groups
+      // per partition.
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+        "131072")
+      // streaming state/commit logs on tmpfs: micro-batch commit latency is
+      // filesystem fsync, not plan work (a cluster would put this on fast
+      // shared storage); falls back to the default temp dir if absent
+      .config("spark.sql.streaming.checkpointLocation",
+        sys.env.getOrElse("SPARK_GRAFT_CKPT",
+          (if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
+           else System.getProperty("java.io.tmpdir")) +
+            s"/graft-bench-ckpt-${java.util.UUID.randomUUID()}"))
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Stops a [[session]]. An EXPLICIT checkpoint root is not temp-deleted
+    * by Spark the way implicit per-query temp checkpoints are, so the
+    * session's own root is removed here. */
+  def stop(spark: SparkSession): Unit = {
     val ckptRoot = spark.conf.get("spark.sql.streaming.checkpointLocation")
     spark.stop()
-    // an EXPLICIT checkpoint root is not temp-deleted by Spark the way
-    // implicit per-query temp checkpoints are — clean up our own
     if (ckptRoot.contains("graft-bench-ckpt")) {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
@@ -236,12 +246,14 @@ object Bench {
       }
       rm(new java.io.File(ckptRoot))
     }
-    // LAST stdout line, after all Spark shutdown noise: compact totals that
-    // always fit the driver's tail window regardless of catalog size; the
-    // steady medians ride here so the round artifact's `parsed` carries them
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"streaming_steady":$steadyJson,"pair_graph_cache":"$pairMode","n_failed":${failed.size},"failed":$failedJson,"sf":"$sfDir"}""")
-    // a bench with failed queries is a failed bench — exit nonzero so
-    // automation can't record it as a healthy round (round-6 lesson)
-    if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Drops the in-process pair-graph and group-stats artifacts, so the
+    * next timed run computes its query instead of consuming an earlier
+    * run's materialized result. */
+  def clearArtifacts(): Unit = {
+    graft.operators.PairGraph.clearInProcess()
+    graft.operators.SemanticPairGraph.clearInProcess()
+    graft.operators.GroupStats.clearInProcess()
   }
 }

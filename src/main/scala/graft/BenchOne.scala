@@ -1,9 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
-
 /** Single-query timing harness for iterating on one operator without
   * paying the full catalog: `runMain graft.BenchOne <query> [repeats]`.
-  * Same session shape as [[Bench]] (cached tables, AQE, codegen cache),
+  * Same session as [[Bench]] ([[Bench.session]], cached tables),
   * prints per-run seconds and the row count so a perf experiment can't
   * silently change the result. */
 object BenchOne {
@@ -11,36 +9,17 @@ object BenchOne {
     require(args.nonEmpty, "usage: BenchOne <queryName>[,<queryName>...] [repeats]")
     val names = args(0).split(",").toSeq
     val repeats = if (args.length > 1) args(1).toInt else 2
-    System.setProperty("graft.cacheTables", "true")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.max(1, cpus.toInt / 2).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.autoBroadcastJoinThreshold", "67108864")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // match Bench's session exactly — an a1 experiment here that ran
-      // sort-based while Bench ran hash-based would optimize the wrong
-      // plan (see Bench.scala for why 128k)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "131072"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(cpus.toInt)
     // pair-graph posture (see Bench): the warmup count() below populates
     // the in-process artifact, so timed runs would measure CONSUMPTION of
     // the warmup's checkpoint, not the query's computation. Cleared
-    // before every timed run unless explicitly shared. With a disk cache
-    // (SPARK_GRAFT_PAIR_CACHE) timed runs measure artifact-read +
-    // consumer work — the cross-process pipeline number, labeled as such.
-    val pairShared = sys.env.get("SPARK_GRAFT_PAIR_SHARED").contains("1")
-    val pairMode =
-      sys.env.get("SPARK_GRAFT_PAIR_CACHE").map(d => s"disk:$d").getOrElse(
-        if (pairShared) "in_process_shared" else "per_run_cleared")
+    // before every timed run. With a disk cache (SPARK_GRAFT_PAIR_CACHE)
+    // timed runs measure artifact-read + consumer work — the
+    // cross-process pipeline number, labeled as such.
+    val pairMode = sys.env.get("SPARK_GRAFT_PAIR_CACHE")
+      .map(d => s"disk:$d").getOrElse("per_run_cleared")
     System.err.println(s"[bench-one] pair_graph_cache=$pairMode")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
@@ -48,14 +27,12 @@ object BenchOne {
         fn(spark, sfDir).explain("formatted")
       val rows = fn(spark, sfDir).count()
       (1 to repeats).foreach { i =>
-        if (!pairShared) { graft.operators.PairGraph.clearInProcess()
-          graft.operators.SemanticPairGraph.clearInProcess()
-          graft.operators.GroupStats.clearInProcess() }
+        Bench.clearArtifacts()
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         println(f"[bench-one] $name run$i ${(System.nanoTime() - t0) / 1e9}%.3f s  rows=$rows")
       }
     }
-    spark.stop()
+    Bench.stop(spark)
   }
 }

@@ -85,8 +85,8 @@ object Queries {
     else t(s, dir, "documents").repartition(s.sparkContext.defaultParallelism)
 
   /** The d2-family near-dup parameter set — ONE definition shared by the
-    * catalog queries, ScaleCheck's explicit capped arm and the NeardupAB
-    * harness, so a frontier report can never silently measure a
+    * catalog queries, ScaleCheck's explicit capped arm and the curation
+    * benchmark, so a frontier report can never silently measure a
     * different configuration than the catalog runs (r9 ADVICE:
     * ScaleCheck hardcoded these). */
   private[graft] val D2Params: graft.operators.PairGraph.Params =
@@ -2421,7 +2421,7 @@ object Queries {
     * larger than targetCell are subdivided by sign bits of an
     * independent md5-derived hyperplane family CENTERED on the assigned
     * cell's centroid (origin planes measurably fail to bisect off-origin
-    * clusters — SubcellProbe, BENCH_NOTES r14) before the in-cell pair
+    * clusters — BENCH_NOTES r14) before the in-cell pair
     * pass, bounding Σ|cell|² where natural clusters would make it
     * quadratic (AnnScaleCheck V5 measured 3.4e8 candidate pairs from 64
     * cells at 200k vectors). targetCell=64 over this fixture's
@@ -3925,10 +3925,8 @@ object Queries {
     * join, and through it decontamination + packing) with different
     * prunings, so exchange reuse never kicks in and the TextStats gate
     * chain would re-scan the full corpus per consumer. Materialized once
-    * on the first job; on a cluster this would be a reliable checkpoint.
-    * Stage-split (x13Kept/x13Survivors/x13DecontInputs/x13Pack) so the
-    * sf10 stage-decomposition probe times the REAL stages, not a copy. */
-  private[graft] def x13Kept(s: SparkSession, dir: String): DataFrame = {
+    * on the first job; on a cluster this would be a reliable checkpoint. */
+  private def x13Kept(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
     val st = graft.functions.TextStats.textStats(coalesce(col("text"), lit("")))
     val g = d.select(col("doc_id"), col("source"), col("text"), st.as("st"))
@@ -3948,7 +3946,7 @@ object Queries {
     * corpus key: the quality gate changes the corpus, so these pairs are
     * NOT the d2 family's (bucket occupancy, and thus candidates,
     * legitimately differ between the gated and ungated corpus). */
-  private[graft] def x13Survivors(dir: String, kept: DataFrame): DataFrame = {
+  private def x13Survivors(dir: String, kept: DataFrame): DataFrame = {
     val pairs = graft.operators.PairGraph.pairs(kept, "text", "doc_id",
       corpusKey = s"$dir#documents#x13kept", D2Params)
     val labels = graft.operators.Dedup.connectedComponents(
@@ -3962,15 +3960,15 @@ object Queries {
     * (doc_id % 50 == 0, x9's rule — eval membership is external, so it
     * is NOT subject to the quality/dedup stages) and the survivor corpus
     * with the eval ids excluded. */
-  private[graft] def x13DecontInputs(s: SparkSession, dir: String,
-                                     surv: DataFrame): (DataFrame, DataFrame) = {
+  private def x13DecontInputs(s: SparkSession, dir: String,
+                              surv: DataFrame): (DataFrame, DataFrame) = {
     val evalSet = docs(s, dir)
       .where(length(normalizeText(col("text"))) > 0 && col("doc_id") % 50 === 0)
     (surv.where(col("doc_id") % 50 =!= 0), evalSet)
   }
 
   /** x13 stage 4 — pack what remains, per source, ordered by doc_id. */
-  private[graft] def x13Pack(clean: DataFrame): DataFrame =
+  private def x13Pack(clean: DataFrame): DataFrame =
     graft.operators.Packing.assignPacks(clean, "source", "doc_id",
         bpeTokenCount(col("text")), budget = 512)
       .groupBy("source", "pack_id")

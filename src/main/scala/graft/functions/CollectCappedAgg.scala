@@ -71,7 +71,7 @@ case class CollectCapped(child: Expression, cap: Int,
   // projection + length prefix); on singleton-heavy aggregations (most
   // grams unique — the realistic large-corpus posting distribution)
   // that per-buffer overhead measured ~25% of the whole postings stage
-  // (FloodPostingProbe, 4M singleton groups: 12.8 s vs collect_list's
+  // (OPTIMIZATION_r18.md §11, 4M singleton groups: 12.8 s vs collect_list's
   // 10.3 s; whole-buffer framing closes the gap).
   @transient private lazy val proj =
     UnsafeProjection.create(Array[DataType](dataType))

@@ -58,21 +58,6 @@ object NativeText {
     seen
   }
 
-  private val Hex = "0123456789abcdef".toCharArray
-
-  /** First 16 hex chars of an md5 digest (manual hex — String.format here
-    * costs more than the digest itself). */
-  def hex16(d: Array[Byte]): String = {
-    val out = new Array[Char](16)
-    var i = 0
-    while (i < 8) {
-      out(2 * i) = Hex((d(i) >> 4) & 0xf)
-      out(2 * i + 1) = Hex(d(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
-
   private val Md5 = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")

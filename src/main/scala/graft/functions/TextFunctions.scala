@@ -4,12 +4,13 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis primitives for large-scale training-data pipelines:
-  * tokenization, language id, quality scoring, fingerprinting.
+  * tokenization, fingerprinting, PII redaction and the stopword lists
+  * (language id and quality scoring are [[TextStats]]).
   *
   * All pure column expressions (codegen'd; run inside the scan stage at
   * 100 TB — no shuffle, no UDF). Hash primitives deliberately use md5
   * (identical bytes in every engine) so results are verifiable against an
-  * external SQL oracle; at production scale swap [[hash64]] for xxhash64.
+  * external SQL oracle; at production scale swap md5 for xxhash64.
   */
 object TextFunctions {
 
@@ -45,9 +46,6 @@ object TextFunctions {
     * Portable across engines (string compare == unsigned numeric compare). */
   def md5_16(c: Column): Column = substring(md5(c), 1, 16)
 
-  /** Production hash (xxhash64, codegen'd, not portable to other engines). */
-  def hash64(c: Column): Column = xxhash64(c)
-
   /** Document fingerprint: md5 of the whitespace-normalized lowercase text —
     * the exact-dedup key that survives formatting noise. */
   def fingerprint(c: Column): Column = md5(normalizeText(c))
@@ -74,70 +72,9 @@ object TextFunctions {
         PiiIpRe, "<IP>"),
       PiiPhoneRe, "<PHONE>")
 
-  // --- language id: stopword-hit heuristic -------------------------------
+  // --- stopword lists (language id and quality scoring in TextStats) -----
 
   val StopwordsEn = Seq("the", "and", "of", "to", "in", "is", "that", "it", "for", "with")
   val StopwordsFr = Seq("le", "la", "les", "de", "des", "et", "un", "une", "est", "que")
   val StopwordsEs = Seq("el", "los", "las", "y", "en", "es", "por", "con", "para", "del")
-
-  private def stopwordHits(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => t.isin(words.map(lit): _*)))
-
-  /** Language guess by stopword-hit count; ties break en > fr > es > und. */
-  def langId(c: Column): Column = {
-    val t = tokens(c)
-    val en = stopwordHits(t, StopwordsEn)
-    val fr = stopwordHits(t, StopwordsFr)
-    val es = stopwordHits(t, StopwordsEs)
-    when(en === 0 && fr === 0 && es === 0, lit("und"))
-      .when(en >= fr && en >= es, lit("en"))
-      .when(fr >= es, lit("fr"))
-      .otherwise(lit("es"))
-  }
-
-  // --- quality scoring ---------------------------------------------------
-
-  /** Ratio of punctuation chars to total chars (0 for empty). */
-  def punctRatio(c: Column): Column = {
-    val s = coalesce(c, lit(""))
-    val total = length(s)
-    when(total === 0, lit(0.0))
-      .otherwise(length(regexp_replace(s, "[^!-/:-@\\[-`{-~]", "")).cast("double") / total)
-  }
-
-  /** Ratio of uppercase letters to all letters (0 when no letters). */
-  def upperRatio(c: Column): Column = {
-    val s = coalesce(c, lit(""))
-    val letters = length(regexp_replace(s, "[^A-Za-z]", ""))
-    when(letters === 0, lit(0.0))
-      .otherwise(length(regexp_replace(s, "[^A-Z]", "")).cast("double") / letters)
-  }
-
-  /** Stopword ratio over whitespace tokens (any of en/fr/es lists). */
-  def stopwordRatio(c: Column): Column = {
-    val t = tokens(c)
-    val n = size(t)
-    val hits = stopwordHits(t, StopwordsEn ++ StopwordsFr ++ StopwordsEs)
-    when(n === 0, lit(0.0)).otherwise(hits.cast("double") / n)
-  }
-
-  /** Mean word length over whitespace tokens (0 for empty). */
-  def meanWordLen(c: Column): Column = {
-    val t = tokens(c)
-    val n = size(t)
-    when(n === 0, lit(0.0))
-      .otherwise(aggregate(t, lit(0L), (acc, w) => acc + length(w)).cast("double") / n)
-  }
-
-  /** Composite quality heuristic in [0,1]: long enough, not punctuation
-    * soup, has stopwords (i.e. looks like natural language), sane word
-    * length. Weights are the usual C4/Gopher-rule flavors. */
-  def qualityScore(c: Column): Column = {
-    val lenOk   = when(length(coalesce(c, lit(""))) >= 200, lit(1.0))
-      .otherwise(length(coalesce(c, lit(""))).cast("double") / 200.0)
-    val punctOk = when(punctRatio(c) <= 0.2, lit(1.0)).otherwise(lit(0.0))
-    val stopOk  = when(stopwordRatio(c) >= 0.05, lit(1.0)).otherwise(lit(0.0))
-    val wordOk  = when(meanWordLen(c).between(2.0, 12.0), lit(1.0)).otherwise(lit(0.0))
-    round(lenOk * 0.4 + punctOk * 0.2 + stopOk * 0.2 + wordOk * 0.2, 4)
-  }
 }

@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   *    longs, groupable by prefix for banding.
   *
   * Portable (md5-based) hashing is used so results hash-match an external
-  * SQL oracle; swap [[graft.functions.TextFunctions.hash64]] in for raw
-  * throughput once verified.
+  * SQL oracle; swap in xxhash64 (codegen'd, not portable to other
+  * engines) for raw throughput once verified.
   */
 object Dedup {
 
@@ -139,7 +139,8 @@ object Dedup {
     * holds data rows, only per-level flooded counts.
     *
     * Recall/cost frontier, measured at sf10 (500k docs, d2 params,
-    * single pass, local[32]; r9 NeardupAB re-measurement): the
+    * single pass, local[32]; BENCH_NOTES r9 "d2 capped vs adaptive at
+    * sf10"): the
     * refinement machinery itself is cheap — the loop terminates at
     * depth 2 (1.45M flooded banded rows → 163k → 0) — and end-to-end
     * the adaptive plan costs ~2× the capped plan (same-process A/B
@@ -167,18 +168,13 @@ object Dedup {
     var cur = banded // (doc, band, key) at lvl 0; + tail once flooded
     var lvl = 0
     var exhausted = false
-    val debug = sys.env.get("SPARK_GRAFT_REFINE_DEBUG").contains("true")
     while (!exhausted && lvl < refineRows) {
-      val t0 = System.nanoTime()
       val counts = cur.groupBy("band", "key").agg(count(lit(1)).as("__n"))
       val joined = cur.join(counts, Seq("band", "key"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       persisted += joined
       val over = joined.where(col("__n") > maxBucket)
-      val nOver = if (debug) over.count() else if (over.isEmpty) 0L else 1L
-      if (debug) System.err.println(
-        f"[refine] lvl $lvl flooded rows $nOver%d  (${(System.nanoTime() - t0) / 1e9}%.1f s)")
-      if (nOver == 0L) { // all buckets fit — no further levels needed
+      if (over.isEmpty) { // all buckets fit — no further levels needed
         done += joined.drop("__n", "tail")
         exhausted = true
       } else {
@@ -297,7 +293,7 @@ object Dedup {
     * corpus pours into verify before the expensive join.
     *
     * Why this exists (measured at sf10, 500k docs, d2 params —
-    * NeardupAB_stages r11): the adaptive plan generates 165M candidate
+    * BENCH_NOTES r11): the adaptive plan generates 165M candidate
     * pairs of which 99.1% have TRUE jaccard < 0.1 and only ~0.008% clear
     * the 0.2 threshold; verify cost is proportional to candidates
     * (~2.0× capped's 82M = the measured 2.05× arm cost ratio). The
@@ -977,7 +973,7 @@ object Dedup {
     // executor dies after materialization. The reliable cut must be
     // EAGER: a lazy reliable checkpoint evaluates the un-persisted
     // lineage once for the first action and again for the checkpoint
-    // write (measured 2× partition evals, tools/CkptProbe) — the exact
+    // write (measured 2× partition evals, commit 0997130) — the exact
     // recompute this cut exists to avoid. localCheckpoint is
     // persist-based, so lazy is fine there.
     // Storage is O(corpus/cluster-width) per executor, freed by the

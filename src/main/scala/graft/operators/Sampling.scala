@@ -21,10 +21,6 @@ object Sampling {
   def hashBucket(id: Column): Column =
     conv(substring(md5(id.cast("string")), 1, 4), 16, 10).cast("long") % 100
 
-  /** Uniform p-percent sample: keep rows whose bucket < p. */
-  def uniform(df: DataFrame, idCol: String, percent: Int): DataFrame =
-    df.where(hashBucket(col(idCol)) < percent)
-
   /** Stratified downsampling at per-stratum percentage rates (e.g.
     * rebalancing languages or sources in a training mix). A pure filter:
     * no shuffle, no rand(), runs inside the scan stage at any scale. */
@@ -101,7 +97,7 @@ object Sampling {
     * sampling must not correlate). Keeps the assigned rank `rn` so the
     * selection is auditable. One shuffle on the key; rows of one key sort
     * on a single task, so pre-reduce pathological heavy hitters with
-    * [[uniform]] before capping (see the x12 catalog note). */
+    * [[stratified]] before capping (see the x12 catalog note). */
   def capPerKey(df: DataFrame, keyCol: String, idCol: String, cap: Int): DataFrame = {
     val w = Window.partitionBy(col(keyCol))
       .orderBy(md5(concat(lit("cap:"), col(idCol).cast("string"))), col(idCol))

@@ -139,8 +139,8 @@ object Similarity {
     *
     * Clustered-corpus caveat: global hyperplanes cannot split a natural
     * cluster (it lands on one side of most planes — the same defect
-    * SubcellProbe measured for the SemDeDup cellplanes, BENCH_NOTES
-    * r14), so Σ|bucket|² tracks Σ|cluster|² as the corpus grows
+    * measured for the SemDeDup cellplanes, BENCH_NOTES r14 "centered
+    * cellplanes"), so Σ|bucket|² tracks Σ|cluster|² as the corpus grows
     * (AnnScaleCheck V5: lsh16 max bucket 4.8k→27.9k at 200k→1.2M
     * vectors). This operator is SUBSUMED at scale by
     * [[cosineNearDupPairsAuto]] — the same (id_a, id_b, cos) contract
@@ -261,7 +261,7 @@ object Similarity {
     * even though two actions consume it (the O(nlist) cell-size collect,
     * then the pair pass). Before the cut the pair pass re-ran the full
     * assignment + bits projection — at 600k vectors a measurable slice of
-    * the capped arm (SemDedupAB r14). Mode selection mirrors
+    * the capped arm (BENCH_NOTES r14). Mode selection mirrors
     * [[Dedup.prefixJaccardPairs]]'s doc table: a configured checkpoint
     * dir → RELIABLE checkpoint (survives executor loss — the right mode
     * for a long 100 TB run); otherwise executor-local localCheckpoint.
@@ -275,7 +275,7 @@ object Similarity {
     * natural cluster centered far off origin, so the whole cell lands on
     * one side of most global planes and the "split" bits are
     * near-constant within exactly the cells that need splitting
-    * (measured at 600k vectors, SubcellProbe r14: origin planes left
+    * (measured at 600k vectors, BENCH_NOTES r14: origin planes left
     * Σ|subcell|² at 3.85e9 of the 6.10e9 unsplit volume with a 12.6k max
     * subcell off a 19.5k max cell; centering the same planes cut it to
     * 4.47e8 with a 1.3k max subcell ≈ targetCell). The per-(cell, plane)
@@ -432,8 +432,8 @@ object Similarity {
     val reliable = df.sparkSession.sparkContext.getCheckpointDir.isDefined
     // reliable mode must be EAGER: a lazy reliable checkpoint evaluates
     // the un-persisted lineage once for the first action and AGAIN for
-    // the checkpoint write (measured: 2× partition evals,
-    // tools/CkptProbe), which would re-introduce the double assignment
+    // the checkpoint write (measured: 2× partition evals, commit
+    // 0997130), which would re-introduce the double assignment
     // pass this artifact exists to eliminate. Eager writes during the
     // one materialization (1× measured); the cellSizes collect follows
     // immediately, so nothing is computed earlier than needed.
@@ -483,10 +483,10 @@ object Similarity {
     // driver rows, require-guarded in [[saltTables]] like the family's
     // other driver collects.
     val saltAbove = 4L * math.max(targetCell, 1)
-    // measurement/debug knob (PointMassProbe's A/B arm): -Dgraft.semdedup
-    // .salt=off disables the guard so the single-task exposure it removes
-    // can be measured against it. Default on; output is identical either
-    // way (the spec asserts it), only task shape differs.
+    // reference arm: -Dgraft.semdedup.salt=off disables the guard (the
+    // single-task exposure it removes is measured in BENCH_NOTES r15).
+    // Default on; output is identical either way (the spec asserts it),
+    // only task shape differs.
     val saltEnabled = !sys.props.get("graft.semdedup.salt").contains("off")
     // subcells partition cells, so when no CELL exceeds the threshold no
     // subcell can either — the already-collected cell sizes prove it and
@@ -577,7 +577,7 @@ object Similarity {
 
   /** Salt count for a flooded key of size n: enough groups to bring the
     * per-group population near targetCell, capped at 64 (s² join keys).
-    * private[graft] so PointMassProbe reports the SAME s the plan uses. */
+    * private[graft] for the spec. */
   private[graft] def saltCount(n: Long, targetCell: Int): Int =
     math.min(64L, (n + targetCell - 1) / math.max(targetCell, 1)).toInt
 
@@ -689,13 +689,11 @@ object Similarity {
     }
   }
 
-  /** Default replication-budget multiplier for the flood-majority clamp
-    * (budget = multiplier × corpus rows); override with
-    * -Dgraft.semdedup.flood.budget. The 3× line is the r16-measured
+  /** Replication-budget multiplier for the flood-majority clamp
+    * (budget = multiplier × corpus rows). The 3× line is the r16-measured
     * boundary between "isolated point masses" (well under it) and
     * "quantizer failing to split" (30×+ over it). */
-  private def floodBudgetMult: Double =
-    sys.props.get("graft.semdedup.flood.budget").map(_.toDouble).getOrElse(3.0)
+  private val floodBudgetMult: Double = 3.0
 
   /** Clamp per-key salt factors so total replicated rows Σ n·s stay
     * inside `budgetRows`, by WATER-FILLING: find the smallest per-group
@@ -711,8 +709,7 @@ object Similarity {
     * (s = 1), exactly the straggler it would have been with no guard at
     * all. T is a pure function of the population multiset, so the plan
     * is deterministic across collect orders. private[graft] for the
-    * spec and PointMassProbe (which must report the same s values the
-    * plan uses). */
+    * spec. */
   private[graft] def clampSaltCounts(flooded: Seq[(Seq[Any], Long)],
                                      targetCell: Int,
                                      budgetRows: Long): Seq[(Seq[Any], Int)] = {
@@ -733,10 +730,9 @@ object Similarity {
 
   /** Per-cell split depth: the smallest k with (|cell| >> k) ≤
     * targetCell, capped at maxExtraBits — THE depth rule (integer
-    * shifts, mirrored by the oracles). private[graft] so PointMassProbe
-    * reports exposure under the same depths the plan uses. */
-  private[graft] def splitDepths(sizes: Array[(Int, Long)], targetCell: Int,
-                                 maxExtraBits: Int): Map[Int, Int] =
+    * shifts, mirrored by the oracles). */
+  private def splitDepths(sizes: Array[(Int, Long)], targetCell: Int,
+                          maxExtraBits: Int): Map[Int, Int] =
     sizes.map { case (cid, n) =>
       var k = 0
       while (k < maxExtraBits && (n >> k) > targetCell) k += 1
@@ -850,7 +846,7 @@ object Similarity {
     *    whose cost tracks corpus size.
     *
     * With the cell-CENTERED split planes the capped arm is also the
-    * faster arm at every measured size (SemDedupAB r14, trained
+    * faster arm at every measured size (BENCH_NOTES r14, trained
     * nlist=64, t=0.99: 15.4 vs 32.9 s at 200k, 42.8 vs 227.3 s at 600k,
     * measured exponent ≈0.93 vs ≈1.7), so the budget no longer marks a
     * wall-clock crossover — it prices LOSSLESSNESS: below it the
@@ -865,7 +861,7 @@ object Similarity {
     * arm with Hamming-≤1 subcell multi-probe, recovering essentially the
     * whole uncapped pair set (3805/3805, 11550/11550, 23235/23237 at
     * 200k/600k/1.2M) at ~2–3× the capped arm and 3–4× below uncapped
-    * (SemDedupAB r14: 22.8/74.9/185.3 s vs capped 16.4/37.4/61.3 vs
+    * (BENCH_NOTES r14: 22.8/74.9/185.3 s vs capped 16.4/37.4/61.3 vs
     * uncapped 29.0/223.0/746.6).
     *
     * Cost note: the uncapped route pays the (unused) cellplane-bits
@@ -930,7 +926,7 @@ object Similarity {
     * 200k→1.2M vectors, Σ|bucket|² 3.2e9 — quadratic, unbounded at
     * 100 TB on clustered corpora). This route quantizes to `centroids`
     * (train with [[IvfIndex.train]], nlist ∝ corpus), splits flooded
-    * cells with CELL-CENTERED planes that measurably bisect (SubcellProbe:
+    * cells with CELL-CENTERED planes that measurably bisect (BENCH_NOTES r14:
     * 13.6–26× candidate-volume cut vs 1.6× for origin planes), defaults
     * to the Hamming-≤1 probed rung above the budget, and salts residual
     * point-mass subcells — every rung of [[semanticNearDupPairsAuto]],
@@ -1022,13 +1018,13 @@ object Similarity {
       * table as ONE referenced object, one JIT-compiled method per row.
       * The original formulation (`least(struct(-cos, cid) …)` over
       * nlist literal-array branches, kept as [[assignLiteral]] — the
-      * reference implementation the spec and AssignProbe pin this form
+      * reference implementation the spec pins this form
       * against) produces the IDENTICAL assignment (same sequential-fold
       * doubles, same tie rule; 0 disagreements over 600k real vectors
       * at nlist 64 and 256) but is the wrong plan in both directions:
       * at catalog nlist its branch-per-centroid expression tree is
       * 2–3× slower (measured 22.5 vs 7.2 s at nlist=64, 43.2 vs 26.2 s
-      * at 256, 600k vectors — AssignProbe r16), and past a few hundred
+      * at 256, 600k vectors — BENCH_NOTES r16), and past a few hundred
       * centroids the tree breaks analysis cost, codegen size (JIT
       * fallback) and task-binary size outright, while nlist must GROW
       * with the corpus (cells ∝ corpus/targetCell). The compiled form

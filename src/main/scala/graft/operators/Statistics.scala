@@ -34,13 +34,6 @@ object Statistics {
     df.groupBy(column).agg(count(lit(1)).as("count"))
       .orderBy(desc("count"), col(column))
 
-  /** A5 — offers per source (dag:719-723). */
-  def perSourceCounts(merged: DataFrame): DataFrame =
-    merged.select(explode(col("offers")).as("o"))
-      .groupBy(col("o.source").as("source"))
-      .agg(count(lit(1)).as("offers"))
-      .orderBy("source")
-
   /** Plugin-path stats bundle: brand / source / condition distributions +
     * price stats (marketeye_operators.py:312-325). */
   def datasetStatistics(merged: DataFrame): Map[String, DataFrame] = {

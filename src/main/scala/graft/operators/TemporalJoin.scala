@@ -77,10 +77,10 @@ object TemporalJoin {
 
   /** Bounded-interval join with automatic plan choice — the entry point
     * callers should use. Two lossless formulations exist with a
-    * data-dependent winner (IntervalAB, BENCH_NOTES "interval-join skew
-    * A/B"): the naive sort-merge θ-join wins uniform keys by ~1.4× (no
-    * explode, one exchange fewer), while the time-bucketed equi-join
-    * ([[intervalBucketed]]) wins a planted 30%-hot-key skew by 54× —
+    * data-dependent winner (BENCH_NOTES r7, "Interval-join formulations
+    * A/B'd under skew"): the naive sort-merge θ-join wins uniform keys
+    * by ~1.4× (no explode, one exchange fewer), while the time-bucketed
+    * equi-join ([[intervalBucketed]]) wins a planted 30%-hot-key skew by 54× —
     * per-key pair volume is quadratic for the SMJ and bounded by bucket
     * co-residence for the bucketed plan.
     *

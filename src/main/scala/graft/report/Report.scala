@@ -9,25 +9,6 @@ import org.apache.spark.sql.{DataFrame, Row}
   * frames are collected — never data-grain rows. */
 object Report {
 
-  /** R1 — DAG-path report: totals, price stats, sources
-    * (golden shape: M/data/processed/report_20260203_080717.txt). */
-  def simple(merged: DataFrame, generatedAt: String): String = {
-    val r: Row = Statistics.globalPriceStats(merged).collect()(0)
-    val sources = r.getSeq[String](r.fieldIndex("sources")).mkString(", ")
-    f"""=== RAPPORT MARKETEYE ===
-       |Généré le: $generatedAt
-       |
-       |STATISTIQUES GLOBALES
-       |---------------------
-       |Nombre total de produits: ${r.getLong(r.fieldIndex("total_products"))}
-       |Nombre total d'offres: ${r.getLong(r.fieldIndex("total_offers"))}
-       |Prix moyen: ${r.getDouble(r.fieldIndex("average_price"))}%.2f MAD
-       |Prix minimum: ${r.getDouble(r.fieldIndex("min_price"))}%.2f MAD
-       |Prix maximum: ${r.getDouble(r.fieldIndex("max_price"))}%.2f MAD
-       |Sources: $sources
-       |""".stripMargin
-  }
-
   /** R1-DAG — the DAG-path report BYTE-EXACT (generate_report,
     * dag:794-817): the Python triple-quoted f-string's leading newline,
     * 12-space indentation (including on the "blank" lines), and trailing

@@ -113,9 +113,12 @@ object Sinks {
     } finally out.close()
   }
 
-  /** S5 — timestamped backup copy (save_to_json_backup, dag:982-1010). */
+  /** S5 — timestamped backup copy (save_to_json_backup, dag:982-1010).
+    * The dir name drops `:` from runTs: Hadoop reads `a:b` in a path
+    * segment as a URI scheme, so an ISO timestamp would break the
+    * overwrite of an existing backup. ts_nodash names pass unchanged. */
   def writeBackup(df: DataFrame, backupDir: String, runTs: String): String = {
-    val path = s"$backupDir/marketeye_backup_$runTs"
+    val path = s"$backupDir/marketeye_backup_${runTs.replace(":", "")}"
     writeJson(df, path)
     path
   }

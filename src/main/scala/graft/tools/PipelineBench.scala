@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 import scala.util.control.NonFatal
 
@@ -38,27 +37,13 @@ object PipelineBench {
     "x17_cluster_split", "x22b_pretrain_neardup")
 
   def main(args: Array[String]): Unit = {
-    System.setProperty("graft.cacheTables", "true")
     val outPath = args.headOption.getOrElse("scratch/BENCH_pipeline.json")
     val names = if (args.length > 1) args.drop(1).toSeq else DefaultFamily
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", math.max(1, cpus.toInt / 2))
-      .config("spark.sql.autoBroadcastJoinThreshold", "67108864")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "131072"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(cpus.toInt)
 
-    graft.operators.PairGraph.clearInProcess()
-    graft.operators.SemanticPairGraph.clearInProcess()
-    graft.operators.GroupStats.clearInProcess()
+    graft.Bench.clearArtifacts()
     graft.Queries.prewarmTables(spark, sfDir)
 
     val failed = scala.collection.mutable.ListBuffer.empty[String]
@@ -93,7 +78,7 @@ object PipelineBench {
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (doc + "\n").getBytes("UTF-8"))
     catch { case NonFatal(e) => System.err.println(s"[pipeline] $outPath: $e") }
-    spark.stop()
+    graft.Bench.stop(spark)
     if (failed.nonEmpty) sys.exit(1)
   }
 }

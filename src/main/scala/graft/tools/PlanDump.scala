@@ -1,15 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import scala.util.control.NonFatal
 
 /** Dumps `.explain("formatted")` for catalog queries to files — the
   * plan-shape evidence (Exchange count, join strategy, PushedFilters,
   * ReadSchema, WholeStageCodegen spans) the optimization rounds commit
-  * under `plans/<round>/`. Session shape matches [[graft.Bench]] so the
-  * dumped plan is the one the bench actually runs (same AQE, broadcast
-  * threshold, shuffle partitions).
+  * under `plans/<round>/`. The session is [[graft.Bench.session]], so the
+  * dumped plan is the one the bench actually runs.
   *
   * Usage: runMain graft.tools.PlanDump <outDir> [suffix] [query...]
   *   writes <outDir>/<query>_<suffix>.txt (suffix default "before").
@@ -28,23 +25,9 @@ object PlanDump {
     val names =
       if (args.length > 2) args.drop(2).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    System.setProperty("graft.cacheTables", "true")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.max(1, cpus.toInt / 2).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.autoBroadcastJoinThreshold", "67108864")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "131072"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(cpus.toInt)
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { n =>
       try {
@@ -59,6 +42,6 @@ object PlanDump {
         System.err.println(s"[plandump] $n FAILED: ${e.getMessage}")
       }
     }
-    spark.stop()
+    graft.Bench.stop(spark)
   }
 }

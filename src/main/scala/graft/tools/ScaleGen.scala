@@ -39,7 +39,6 @@ object ScaleGen extends Serializable {
     "partition", "plan", "query", "row", "scan", "shuffle", "slow", "small",
     "sort", "spark", "stream", "table", "the", "value", "vector")
 
-  private val Langs = Array("en", "zh", "es", "fr", "de")
   private val Segments = Array("MACHINERY", "HOUSEHOLD", "BUILDING", "AUTOMOBILE", "FURNITURE")
   private val Priorities = Array("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
   private val EventTypes = Array("click", "view", "purchase", "signup", "error")
@@ -231,13 +230,6 @@ object ScaleGen extends Serializable {
       "o_orderpriority"), "orders")
 
     // lineitem: 1..7 lines per order (avg ~4), FKs within the scaled dims.
-    // SPARK_GRAFT_LINEITEM_SKEW=<frac>: mega-group skew mode — each line
-    // re-points its l_partkey to key 0 with probability <frac> (an
-    // independent post-draw, so every other column keeps the unskewed
-    // corpus's exact values). frac=0.17 at sf10 plants a ~10M-row group
-    // among 60M lines — the stress fixture for the anomaly family's
-    // exact per-group quantile buffers (r13 verdict item 3).
-    val skewFrac = sys.env.get("SPARK_GRAFT_LINEITEM_SKEW").map(_.toDouble).getOrElse(0.0)
     if (wanted("lineitem")) write(spark.range(0, nOrders, 1, par).flatMap { id =>
       val r = rngFor(5, id)
       // replay orders' draw sequence so l_shipdate really follows THIS
@@ -247,14 +239,7 @@ object ScaleGen extends Serializable {
       val orderDate = epoch1995 + or.nextInt(orderSpanDays).toLong * 86400000L
       val nLines = 1 + r.nextInt(7)
       (1 to nLines).map { ln =>
-        val partDraw = math.abs(r.nextLong()) % nPart
-        val part =
-          // salt 14: its own draw family — salt 9 is documents' field
-          // stream, and reusing it would deterministically couple skew
-          // membership to document content for overlapping ids
-          if (skewFrac > 0 && rngFor(14, id * 8 + ln).nextDouble() < skewFrac) 0L
-          else partDraw
-        (id, part, math.abs(r.nextLong()) % nSupplier, ln,
+        (id, math.abs(r.nextLong()) % nPart, math.abs(r.nextLong()) % nSupplier, ln,
           (1 + r.nextInt(50)).toDouble,
           round2(900.0 + r.nextDouble() * 104100.0),
           r.nextInt(11) / 100.0, r.nextInt(9) / 100.0,
@@ -289,18 +274,9 @@ object ScaleGen extends Serializable {
     // ~0.3, noise 0.1, matching sf0.1 magnitudes); ~2% planted near-dups
     // of the previous vector (same label, +0.001 noise). Row generation
     // lives in [[vecRow]] so AnnScaleCheck replays the identical vectors.
-    // SPARK_GRAFT_EMB_BLAST=<count>: duplicate-blast mode — the first
-    // <count> rows all carry row 0's exact vector (an adversarial
-    // point mass no split plane can subdivide), the PointMassProbe /
-    // salt-guard stress fixture. Blast corpora fail AnnScaleCheck's V0
-    // by construction — they are not replayable by vecRow and exist
-    // only for the guard measurement.
-    val blast = sys.env.get("SPARK_GRAFT_EMB_BLAST").map(_.toLong).getOrElse(0L)
     if (wanted("embeddings")) write(
-      spark.range(0, nVecs, 1, par).map { id =>
-        if (id < blast) { val (_, v, l) = vecRow(0); (id.toLong, v, l) }
-        else vecRow(id)
-      }.toDF("vec_id", "embedding", "label"), "embeddings")
+      spark.range(0, nVecs, 1, par).map(id => vecRow(id))
+        .toDF("vec_id", "embedding", "label"), "embeddings")
 
     spark.stop()
   }

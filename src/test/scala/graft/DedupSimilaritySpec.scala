@@ -1234,6 +1234,15 @@ class DedupSimilaritySpec extends SparkSuite {
     val got = Dedup.connectedComponents(ids, pairs, lpMaxRounds = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == (1L to n).map(_ -> 1L).toMap)
+    // k interleaved disjoint chains: edge (i, i+k) links each id to its
+    // same-residue successor, so every component is a residue class whose
+    // min id (the label) is i mod k
+    val k = 3L
+    val m = 36L
+    val chains = Dedup.connectedComponents((0L until m).toDF("id"),
+      (0L until m - k).map(i => (i, i + k)).toDF("id_a", "id_b"), lpMaxRounds = 2)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(chains == (0L until m).map(i => i -> i % k).toMap)
   }
 
   test("connected components: planted 10k-member giant component (spammed template)") {

@@ -171,6 +171,19 @@ class PipelineSpec extends SparkSuite {
     assert(txt.contains("é") && !txt.contains("\\u00e9"))
   }
 
+  test("S5 backup sink: a second run with an ISO runTs overwrites the backup") {
+    import spark.implicits._
+    val out = tempDir("backupsink")
+    val runTs = "2026-01-01T01:00:00"
+    val first = graft.sinks.Sinks.writeBackup(Seq("a", "b").toDF("k"), out, runTs)
+    val second = graft.sinks.Sinks.writeBackup(Seq("c").toDF("k"), out, runTs)
+    assert(second == first && !first.contains(":"))
+    assert(spark.read.json(second).as[String].collect().toSeq == Seq("c"))
+    // ts_nodash run names (what the DAG passes) keep their exact dir name
+    assert(graft.sinks.Sinks.writeBackup(Seq("d").toDF("k"), out, "20260101T010000") ==
+      s"$out/marketeye_backup_20260101T010000")
+  }
+
   test("S1 reader: array vs NDJSON autodetect; malformed lines dropped") {
     val raw = tempDir("jsonsrc")
     write(raw, "avito_mixed.json",
