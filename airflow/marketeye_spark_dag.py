@@ -3,6 +3,8 @@
 # pipeline (M/dags/marketeye_etl_dag.py). Airflow only schedules; every
 # stage is one spark-submit of graft.pipeline.StageRunner, and stages hand
 # off through parquet stage dirs instead of JSON files on a shared volume.
+# StageRunner sets its own session conf (graft.SparkEntry.session), so the
+# tasks pass none.
 #
 # Requires: apache-airflow + apache-airflow-providers-apache-spark
 # (public packages), a Spark cluster (or local[*]) reachable from the
@@ -33,10 +35,6 @@ def stage(task_id: str, *app_args: str) -> SparkSubmitOperator:
         application=JAR,
         java_class="graft.pipeline.StageRunner",
         application_args=list(app_args),
-        conf={
-            "spark.sql.session.timeZone": "UTC",
-            "spark.sql.adaptive.enabled": "true",
-        },
     )
 
 

@@ -29,8 +29,7 @@ import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = session(cpus.toInt)
+    val spark = session()
 
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     // pair-graph cache posture for this run, recorded in the output JSON:
@@ -182,55 +181,22 @@ object Bench {
   }
 
   /** The session every bench main times under (Bench, BenchOne, PlanDump,
-    * PipelineBench): one definition, so a plan dumped or timed by any of
-    * them is the plan the catalog bench runs. Base tables are cached for
-    * the process (graft.cacheTables). Stop it with [[stop]]. */
-  def session(cpus: Int): SparkSession = {
+    * PipelineBench): [[SparkEntry.session]] plus the timing posture —
+    * base tables cached for the process (graft.cacheTables) and a
+    * streaming checkpoint root on tmpfs. Stop it with [[stop]]. */
+  def session(): SparkSession = {
     System.setProperty("graft.cacheTables", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // reducer count: HALF the cores, measured fastest across the catalog
-      // (32 reducers on local[32] pay more per-task scheduling than the
-      // extra width buys at sf0.1; explode-amplified stages re-widen
-      // explicitly — see Dedup.pairsFromGroups). On a real cluster this is
-      // per-job tuned to data volume; AQE still coalesces below this.
-      .config("spark.sql.shuffle.partitions", math.max(1, cpus / 2))
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE decides broadcasts from ACTUAL runtime sizes, so a higher
-      // ceiling is safe at any scale (it can never broadcast something
-      // big); 64 MB lets the mid-size build sides of the pair pipelines
-      // skip a shuffle leg locally, same as a tuned cluster would run
-      .config("spark.sql.autoBroadcastJoinThreshold", "67108864")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the generated-class cache defaults to 100 entries; a catalog of ~60
-      // distinct queries compiles several codegen stages each, so at the
-      // default size every re-execution evicts, re-runs janino, AND loses
-      // the JIT state of the previous (now-discarded) class. Any long-lived
-      // app serving a query catalog wants this sized to its working set.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // ObjectHashAggregate (every TypedImperativeAggregate: MinByOrd,
-      // the merge fold, collect_set over arrays) falls back to FULL
-      // SORT-BASED aggregation after only 128 distinct keys per
-      // partition — the default turns the a1/a1b rollups into external
-      // sorts of the unreduced input at sf10 (measured: a1b 57→36 s).
-      // 128k keys/partition × O(100 B) buffers is a few MB of executor
-      // memory — the right trade anywhere short of billions of groups
-      // per partition.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "131072")
-      // streaming state/commit logs on tmpfs: micro-batch commit latency is
-      // filesystem fsync, not plan work (a cluster would put this on fast
-      // shared storage); falls back to the default temp dir if absent
-      .config("spark.sql.streaming.checkpointLocation",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT",
-          (if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-           else System.getProperty("java.io.tmpdir")) +
-            s"/graft-bench-ckpt-${java.util.UUID.randomUUID()}"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+    // streaming state/commit logs on tmpfs: micro-batch commit latency is
+    // filesystem fsync, not plan work (a cluster would put this on fast
+    // shared storage); falls back to the default temp dir if absent. Set
+    // as a system property so the context's SparkConf carries it, and
+    // with it every newSession() clone (Queries.streamSession).
+    System.setProperty("spark.sql.streaming.checkpointLocation",
+      sys.env.getOrElse("SPARK_GRAFT_CKPT",
+        (if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
+         else System.getProperty("java.io.tmpdir")) +
+          s"/graft-bench-ckpt-${java.util.UUID.randomUUID()}"))
+    SparkEntry.session()
   }
 
   /** Stops a [[session]]. An EXPLICIT checkpoint root is not temp-deleted

@@ -10,8 +10,7 @@ object BenchOne {
     val names = args(0).split(",").toSeq
     val repeats = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Bench.session(cpus.toInt)
+    val spark = Bench.session()
     // pair-graph posture (see Bench): the warmup count() below populates
     // the in-process artifact, so timed runs would measure CONSUMPTION of
     // the warmup's checkpoint, not the query's computation. Cleared

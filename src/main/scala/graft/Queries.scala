@@ -2808,7 +2808,7 @@ object Queries {
     * not one per core (at production volume size it up — it is per-query
     * here, not global). The clone shares the SparkContext; the parent's
     * runtime confs are untouched. */
-  private def streamSession(s: SparkSession, statePartitions: Int): SparkSession = {
+  private[graft] def streamSession(s: SparkSession, statePartitions: Int): SparkSession = {
     val c = s.newSession()
     c.conf.set("spark.sql.shuffle.partitions", statePartitions)
     // these are one-shot verification streams (start → drain → stop):

@@ -119,31 +119,18 @@ object StreamBench {
         } finally src.unpersist()
         val watched = base.resolve(s"in_$shape")
         Files.createDirectory(watched)
-        val ss = spark.newSession()
-        // state-partition sizing matches the catalog queries': the event
-        // shapes keep tiny keyed state (4 stores keep state-store
-        // maintenance off their numbers), but st8's banded state and
-        // candidate fan-out are corpus-proportional — 4 partitions
-        // serialize its candidate generation onto 4 tasks (measured
-        // 40.2→14.4 s at sf1), so its steady-state numbers must be taken
-        // in the cluster-sized config the catalog query actually uses
-        // (r11 ADVICE).
-        ss.conf.set("spark.sql.shuffle.partitions",
+        // the catalog's stream session, with its state-partition sizing:
+        // the event shapes keep tiny keyed state (4 stores keep
+        // state-store maintenance off their numbers), but st8's banded
+        // state and candidate fan-out are corpus-proportional — 4
+        // partitions serialize its candidate generation onto 4 tasks
+        // (measured 40.2→14.4 s at sf1), so its steady-state numbers must
+        // be taken in the cluster-sized config the catalog query actually
+        // uses (r11 ADVICE).
+        val ss = Queries.streamSession(spark,
           if (shape == "st8")
             math.max(4, spark.sparkContext.defaultParallelism / 2)
           else 4)
-        // one-shot measurement streams: no failure-replay depth needed,
-        // and 100 retained versions of every state store would sit on
-        // the tmpfs checkpoint (same setting as Queries.streamSession)
-        ss.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-        // and the same no-data-micro-batch setting as the catalog's
-        // streamSession: st6 (the only watermarked shape) is an inner
-        // interval join whose output never waits on the watermark, so
-        // the post-data trigger only paid a second WAL + state-commit
-        // round per chunk — the steady-state numbers should measure the
-        // per-chunk cost a production st6 pays, not an eviction
-        // scheduling artifact doubled across every chunk
-        ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
         def stream = ss.readStream.schema(src.schema).parquet(watched.toString)
         val (df, mode) = shape match {
           case "st2" =>

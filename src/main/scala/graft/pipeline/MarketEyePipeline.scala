@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   * then tiny statistics aggregations and fan-out sinks.
   *
   * Orchestration model (per BASELINE "Spark jobs orchestrated by Airflow"):
-  * an external scheduler invokes [[run]] per day via spark-submit; stage
-  * boundaries that the reference persisted as JSON files become either
-  * in-memory lineage (default — no re-parse between stages) or optional
-  * staged parquet (stageDir) when the orchestrator wants per-stage
+  * stage boundaries that the reference persisted as JSON files become
+  * in-memory lineage here (no re-parse between stages); [[StageRunner]]
+  * runs the same stage bodies one per spark-submit, handing off through
+  * parquet stage dirs when the orchestrator wants per-stage
   * checkpointing and restartability.
   *
   * At 100 TB: each transform is a scan-stage projection; the merge is one
@@ -31,16 +31,9 @@ object MarketEyePipeline {
       rawDir: String,
       outDir: String,
       runTs: String,                       // injected run timestamp (determinism)
-      compat: graft.transform.CompatMode = graft.transform.CompatMode.Plugin,
-      sourceOrder: Seq[String] = ProductMerge.PluginOrder,
-      dedupPerProduct: Boolean = true,
-      dedupGlobal: Boolean = true,
-      anomalyMinGroup: Int = 3,
-      anomalyZ: Double = 2.0,
       llmTopK: Int = 0,                    // T5: enrich top-K anomalies (0 = off)
       llmTransport: graft.operators.LlmEnrich.Transport =
-        new graft.operators.LlmEnrich.StubTransport,
-      stageDir: Option[String] = None)     // optional per-stage checkpoints
+        new graft.operators.LlmEnrich.StubTransport)
 
   case class Result(merged: DataFrame, statsJson: String, report: String,
                     anomalyReport: String)
@@ -65,44 +58,52 @@ object MarketEyePipeline {
   def extract(spark: SparkSession, cfg: Config, source: String): DataFrame = source match {
     case "Avito" =>
       Transforms.avito(JsonSource.loadSource(spark, cfg.rawDir, "Avito",
-        Schemas.avitoSchema), cfg.runTs, cfg.compat)
+        Schemas.avitoSchema), cfg.runTs)
     case "Jumia" =>
       Transforms.jumia(JsonSource.loadSource(spark, cfg.rawDir, "Jumia",
-        Schemas.jumiaSchema), cfg.runTs, cfg.compat)
+        Schemas.jumiaSchema), cfg.runTs)
     case "Electroplanet" =>
       Transforms.electroplanet(JsonSource.loadSource(spark, cfg.rawDir, "Electroplanet",
-        Schemas.electroplanetSchema), cfg.runTs, cfg.compat)
+        Schemas.electroplanetSchema), cfg.runTs)
     case other => throw new IllegalArgumentException(s"unknown source: $other")
   }
 
-  private def stage(df: DataFrame, cfg: Config, name: String): DataFrame =
-    cfg.stageDir match {
-      case Some(d) =>
-        df.write.mode("overwrite").parquet(s"$d/$name")
-        df.sparkSession.read.parquet(s"$d/$name")
-      case None => df
-    }
+  /** The transformed sources, in plugin order, → merged products (the
+    * one shuffle), with per-product and global offer dedup. */
+  def merge(transformed: Seq[DataFrame]): DataFrame =
+    ProductMerge.merge(transformed.reduce(_ unionByName _), ProductMerge.PluginOrder,
+      dedupPerProduct = true, dedupGlobal = true)
+
+  /** Anomaly run (Z1–Z6) at offer grain over (brand, model) groups: every
+    * offer with a positive price. */
+  def anomalies(merged: DataFrame): DataFrame = {
+    val offers = merged
+      .select(col("brand"), col("model"), col("product_id"), explode(col("offers")).as("o"))
+      .select(col("brand"), col("model"), col("product_id"),
+        col("o.price").as("price"), col("o.url").as("url"))
+      .where(col("price") > 0)
+    Anomaly.zScoreAnomalies(offers, Seq("brand", "model"), "price")
+  }
+
+  /** Load fan-out: the final JSON, the timestamped backup, the CSV
+    * export and the relational products/offers pair under `outDir`. */
+  def load(merged: DataFrame, outDir: String, runTs: String): Unit = {
+    Sinks.writeJson(merged, s"$outDir/marketeye_final")
+    Sinks.writeBackup(merged, s"$outDir/backups", runTs)
+    Sinks.writeCsv(merged, s"$outDir/analysis_csv")
+    Sinks.writeRelationalFiles(merged, s"$outDir/relational")
+  }
 
   def run(spark: SparkSession, cfg: Config): Result = {
     // extract (3 parallel narrow stages), union, merge (the one shuffle)
-    val unified = cfg.sourceOrder.map(s => stage(extract(spark, cfg, s), cfg, s"transformed_$s"))
-      .reduce(_ unionByName _)
-    val merged = stage(ProductMerge.merge(unified, cfg.sourceOrder,
-      cfg.dedupPerProduct, cfg.dedupGlobal), cfg, "merged").cache()
+    val merged = merge(ProductMerge.PluginOrder.map(extract(spark, cfg, _))).cache()
 
     // stats + reports (tiny aggregates)
     val statsRow = Statistics.globalPriceStats(merged).collect()(0)
     val statsJson = renderStatsJson(statsRow)
     val report = Report.detailed(merged, cfg.runTs)
 
-    // anomaly run (Z1–Z6) at offer grain over (brand, model) groups
-    val offers = merged
-      .select(col("brand"), col("model"), col("product_id"), explode(col("offers")).as("o"))
-      .select(col("brand"), col("model"), col("product_id"),
-        col("o.price").as("price"), col("o.url").as("url"))
-      .where(col("price") > 0)
-    val flagged = Anomaly.zScoreAnomalies(offers, Seq("brand", "model"), "price",
-      cfg.anomalyZ, cfg.anomalyMinGroup)
+    val flagged = anomalies(merged)
     val summary = Anomaly.summary(flagged, Seq("brand", "model")).collect()(0)
     val topKFrame = flagged
       .orderBy(desc("deviation_percent"), col("url"))
@@ -119,12 +120,7 @@ object MarketEyePipeline {
     val topK = topKFrame.limit(10).collect().toSeq
     val anomalyReport = Report.anomalies(summary, topK, cfg.runTs)
 
-    // load fan-out
-    Sinks.writeJson(merged, s"${cfg.outDir}/marketeye_final")
-    Sinks.writeBackup(merged, s"${cfg.outDir}/backups", cfg.runTs)
-    Sinks.writeCsv(merged, s"${cfg.outDir}/analysis_csv")
-    Sinks.writeRelationalFiles(merged, s"${cfg.outDir}/relational")
-
+    load(merged, cfg.outDir, cfg.runTs)
     Result(merged, statsJson, report, anomalyReport)
   }
 }

@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import graft.operators.{Anomaly, ProductMerge}
+import graft.SparkEntry
+import graft.operators.ProductMerge
 import graft.sinks.Sinks
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Per-stage CLI for external orchestration (Airflow `SparkSubmitOperator`,
   * cron, anything that can spark-submit): each invocation runs ONE pipeline
@@ -26,18 +26,12 @@ import org.apache.spark.sql.functions._
   */
 object StageRunner {
 
-  private def session(): SparkSession = SparkSession.builder()
-    .appName("marketeye-stage")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "true")
-    .getOrCreate()
-
   def main(args: Array[String]): Unit = {
     // under spark-submit this builds the app session and stops it at the
     // end; when a session already exists (embedded/test use) reuse it and
     // leave its lifecycle to the caller
     val preExisting = SparkSession.getDefaultSession.isDefined
-    val spark = session()
+    val spark = SparkEntry.session()
     args.toList match {
       case stage :: rest if stage.startsWith("extract_") =>
         val (rawDir, stageDir, runTs) = (rest(0), rest(1), rest(2))
@@ -47,11 +41,8 @@ object StageRunner {
           .write.mode("overwrite").parquet(s"$stageDir/transformed_$source")
 
       case "merge" :: stageDir :: _ =>
-        val unified = ProductMerge.PluginOrder
-          .map(src => spark.read.parquet(s"$stageDir/transformed_$src"))
-          .reduce(_ unionByName _)
-        ProductMerge.merge(unified, ProductMerge.PluginOrder,
-            dedupPerProduct = true, dedupGlobal = true)
+        MarketEyePipeline.merge(ProductMerge.PluginOrder
+            .map(src => spark.read.parquet(s"$stageDir/transformed_$src")))
           .write.mode("overwrite").parquet(s"$stageDir/merged")
 
       case "stats" :: stageDir :: _ =>
@@ -60,22 +51,12 @@ object StageRunner {
           .coalesce(1).write.mode("overwrite").json(s"$stageDir/statistics")
 
       case "anomalies" :: stageDir :: _ =>
-        val merged = spark.read.parquet(s"$stageDir/merged")
-        val offers = merged
-          .select(col("brand"), col("model"), col("product_id"),
-            explode(col("offers")).as("o"))
-          .select(col("brand"), col("model"), col("product_id"),
-            col("o.price").as("price"), col("o.url").as("url"))
-          .where(col("price") > 0)
-        Anomaly.zScoreAnomalies(offers, Seq("brand", "model"), "price")
+        MarketEyePipeline.anomalies(spark.read.parquet(s"$stageDir/merged"))
           .write.mode("overwrite").parquet(s"$stageDir/anomalies")
 
       case "load" :: stageDir :: outDir :: runTs :: rest =>
         val merged = spark.read.parquet(s"$stageDir/merged")
-        Sinks.writeJson(merged, s"$outDir/marketeye_final")
-        Sinks.writeBackup(merged, s"$outDir/backups", runTs)
-        Sinks.writeCsv(merged, s"$outDir/analysis_csv")
-        Sinks.writeRelationalFiles(merged, s"$outDir/relational")
+        MarketEyePipeline.load(merged, outDir, runTs)
         // optional 5th arg: JDBC URL — the reference's PostgreSQL load
         // (create DB if absent → write products/offers → index DDL,
         // M/dags/marketeye_etl_dag.py:838-927)

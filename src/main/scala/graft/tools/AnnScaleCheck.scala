@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Invariant-based verification of the embedding/ANN family at scale
@@ -57,18 +57,7 @@ object AnnScaleCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     System.setProperty("graft.cacheTables", "true")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", math.max(1, cpus.toInt / 2))
-      .config("spark.sql.autoBroadcastJoinThreshold", "67108864")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session()
     import spark.implicits._
 
     val failures = scala.collection.mutable.ListBuffer.empty[String]

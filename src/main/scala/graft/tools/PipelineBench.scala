@@ -40,8 +40,7 @@ object PipelineBench {
     val outPath = args.headOption.getOrElse("scratch/BENCH_pipeline.json")
     val names = if (args.length > 1) args.drop(1).toSeq else DefaultFamily
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Bench.session(cpus.toInt)
+    val spark = graft.Bench.session()
 
     graft.Bench.clearArtifacts()
     graft.Queries.prewarmTables(spark, sfDir)

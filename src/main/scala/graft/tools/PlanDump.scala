@@ -26,8 +26,7 @@ object PlanDump {
       if (args.length > 2) args.drop(2).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Bench.session(cpus.toInt)
+    val spark = graft.Bench.session()
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { n =>
       try {

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Invariant-based verification of the heavy dedup/curation family at
@@ -58,24 +58,7 @@ object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     System.setProperty("graft.cacheTables", "true")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", math.max(1, cpus.toInt / 2))
-      .config("spark.sql.autoBroadcastJoinThreshold", "67108864")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // one long session runs eight disk-heavy checks back to back;
-      // shuffle files of finished checks are only deleted when their
-      // RDDs are GC'd, and at sf10 the accumulated spill exceeds the
-      // box (two C7 no-space deaths, r11). Periodic GC lets the
-      // ContextCleaner reclaim each check's shuffles while the next
-      // one runs.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     import spark.implicits._
 
     // the corpus' vocabulary mode — must match how the dir was generated
@@ -295,8 +278,8 @@ object ScaleCheck {
               col("doc_id") < nDocs * (i + 1) / nChunks)
             .coalesce(1).write.parquet(base.resolve(s"stage_$i").toString)
         }
-        val ss = spark.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions",
+        // append-mode, no watermark: the catalog's stream session fits
+        val ss = graft.Queries.streamSession(spark,
           math.max(4, spark.sparkContext.defaultParallelism / 2))
         val stream = ss.readStream.schema(actual.schema)
           .parquet(watched.toString)

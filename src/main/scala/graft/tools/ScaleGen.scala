@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import scala.util.Random
@@ -159,15 +159,7 @@ object ScaleGen extends Serializable {
     // discriminative vocabulary (decontamination-router fixtures); the
     // default replicates the driver's 31-word flooded vocabulary
     val wideVocab = sys.env.get("SPARK_GRAFT_DOC_VOCAB").contains("wide")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scalegen")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session()
     import spark.implicits._
 
     val nCustomer = (150000 * sf).toLong

@@ -21,6 +21,12 @@ class CollectCappedSpec extends SparkSuite {
     val want = df.groupBy("k")
       .agg(sort_array(collect_list(col("v"))).as("ids"))
     assert(got.except(want).isEmpty && want.except(got).isEmpty)
+    // the same under the sort-based aggregation fallback: with a
+    // threshold of 1 key every partial and final buffer leaves the hash
+    // map and is merged by the sort-based path instead
+    withConf("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", Some("1")) {
+      assert(got.except(want).isEmpty && want.except(got).isEmpty)
+    }
   }
 
   test("overflowed groups report size cap+1, never the full group") {

@@ -100,17 +100,10 @@ class PipelineSpec extends SparkSuite {
     write(raw, "electroplanet_data.json", electroJson)
     val cfg = MarketEyePipeline.Config(rawDir = raw, outDir = tempDir("marketeye_cg_out"),
       runTs = "20260101_120000")
-    val prev = spark.conf.getOption("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val unified = cfg.sourceOrder
-        .map(s => MarketEyePipeline.extract(spark, cfg, s)).reduce(_ unionByName _)
-      val merged = graft.operators.ProductMerge.merge(unified, cfg.sourceOrder,
-        dedupPerProduct = true, dedupGlobal = true)
+    withConf("spark.sql.codegen.fallback", Some("false")) {
+      val merged = MarketEyePipeline.merge(graft.operators.ProductMerge.PluginOrder
+        .map(MarketEyePipeline.extract(spark, cfg, _)))
       assert(merged.count() == 4) // throws InternalCompilerException if any stage >64 KB
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
-      case None => spark.conf.unset("spark.sql.codegen.fallback")
     }
   }
 

@@ -86,6 +86,29 @@ class ProductMergeSpec extends SparkSuite {
     assert(r1.getSeq[Row](r1.fieldIndex("offers")).length == r2.getSeq[Row](r2.fieldIndex("offers")).length)
   }
 
+  test("merge: the sort-based aggregation fallback gives the default-conf answer") {
+    // The suite session hash-aggregates up to 131072 keys per partition.
+    // A threshold of 1 sends both typed-imperative aggregations, the
+    // MinByOrd pre-reduce and the collect_list fold, through Spark's
+    // sort-based fallback, which merges their buffers by another path.
+    // 120 products over 2 input partitions, with per-product
+    // (source,url) and cross-product (source,price,url) duplicates.
+    val rows = for {
+      p <- 0 until 120
+      src <- ProductMerge.PluginOrder.take(1 + p % 3)
+    } yield product(s"p_$p", "B", s"name-$src-${p % 7}", Map(s"k${p % 4}" -> src), src,
+      Seq((src, 100.0 + p % 5, s"u${p % 50}", s"t${p % 3}"), (src, 200.0, s"u${p % 50}", "t9"),
+        (src, 300.0 + p, s"v$p", "t1")))
+    def merged() = ProductMerge.merge(mkDf(rows), dedupGlobal = true)
+    assert("ObjectHashAggregate".r.findAllIn(
+      merged().queryExecution.executedPlan.toString).size >= 2)
+    val hash = merged().orderBy("product_id").collect().toSeq
+    val sorted = withConf("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+      Some("1"))(merged().orderBy("product_id").collect().toSeq)
+    assert(hash.length == 120)
+    assert(sorted == hash)
+  }
+
   test("merge plan: single shuffle on product_id for the fold itself") {
     val df = mkDf(Seq(
       product("p_1", "B", "N", Map(), "Avito", Seq(("Avito", 1.0, "u", "t")))))

@@ -39,7 +39,15 @@ class StageRunnerSpec extends SparkSuite {
     write(raw, "jumia_products.json", jumiaJson)
     write(raw, "electroplanet_data.json", electroJson)
 
-    Seq("extract_avito", "extract_jumia", "extract_electroplanet").foreach { s =>
+    // production runs the engine's one session: a stage call sets the
+    // shared conf on the session it runs in (here the sort-based
+    // aggregation fallback, which Spark's default puts at 128 keys)
+    val oha = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    withConf(oha, None) {
+      StageRunner.main(Array("extract_avito", raw, stage, "20260101_120000"))
+      assert(spark.conf.get(oha) == "131072")
+    }
+    Seq("extract_jumia", "extract_electroplanet").foreach { s =>
       StageRunner.main(Array(s, raw, stage, "20260101_120000"))
     }
     StageRunner.main(Array("merge", stage))
