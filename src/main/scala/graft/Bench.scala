@@ -24,7 +24,7 @@ import scala.util.control.NonFatal
   * Args: optional query names → bench only those (iteration aid);
   * `-name` excludes a query from the full catalog (big-sf runs exclude
   * the documented-superlinear d4 counting plan and time it separately).
-  * Env: SPARK_GRAFT_EXPLAIN=true prints each query's formatted plan.
+  * Formatted plans: `tools.PlanDump`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -102,11 +102,6 @@ object Bench {
     }
     val names = (if (included.nonEmpty) names0.filter(included.contains) else names0)
       .filterNot(excludeSet.contains)
-    if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("true"))
-      names.foreach { n =>
-        System.err.println(s"==== $n ====")
-        SparkEntry.queries(n)(spark, sfDir).explain("formatted")
-      }
     // one untimed warmup pass (janino compilation + C2 JIT of native
     // expression evals + base-table cache materialization), then two timed
     // passes, min per query — numbers measure the plan, not compiler

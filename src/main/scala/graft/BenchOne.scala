@@ -22,8 +22,6 @@ object BenchOne {
     System.err.println(s"[bench-one] pair_graph_cache=$pairMode")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("true"))
-        fn(spark, sfDir).explain("formatted")
       val rows = fn(spark, sfDir).count()
       (1 to repeats).foreach { i =>
         Bench.clearArtifacts()

@@ -229,40 +229,11 @@ object StreamBench {
         val q = df.writeStream.outputMode(mode).format("noop")
           .option("checkpointLocation", ckptRoot.resolve(s"ckpt_$shape").toString)
           .start()
-        // SPARK_GRAFT_STREAM_DEBUG=1: per-chunk attribution on stderr
-        // (wall vs the engine's own trigger durations and state-store
-        // commit times, plus JVM GC delta) — measurement aid only, off by
-        // default, never touches the timed numbers or the output JSON.
-        val debug = sys.env.get("SPARK_GRAFT_STREAM_DEBUG").contains("1")
-        import scala.jdk.CollectionConverters._
-        def gcMillis(): Long =
-          java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-            .asScala.map(_.getCollectionTime).sum
-        var seenProgress = 0
         val times = (0 until nBatches).map { i =>
           moveParts(base.resolve(s"stage_${shape}_$i"), watched, s"c$i")
-          val g0 = if (debug) gcMillis() else 0L
           val t0 = System.nanoTime()
           q.processAllAvailable()
-          val sec = (System.nanoTime() - t0) / 1e9
-          if (debug) {
-            val gc = gcMillis() - g0
-            val recent = q.recentProgress.drop(seenProgress)
-            seenProgress += recent.length
-            System.err.println(f"[stream-debug] $shape chunk $i wall=$sec%.3f gc=${gc}ms triggers=${recent.length}")
-            recent.foreach { p =>
-              val dur = p.durationMs.asScala.toSeq.sortBy(_._1)
-                .map { case (k, v) => s"$k=$v" }.mkString(" ")
-              System.err.println(s"[stream-debug]   rows=${p.numInputRows} $dur")
-              p.stateOperators.foreach { so =>
-                System.err.println(s"[stream-debug]   state ${so.operatorName} " +
-                  s"total=${so.numRowsTotal} upd=${so.numRowsUpdated} " +
-                  s"rem=${so.numRowsRemoved} commitMs=${so.commitTimeMs} " +
-                  s"mem=${so.memoryUsedBytes}")
-              }
-            }
-          }
-          sec
+          (System.nanoTime() - t0) / 1e9
         }
         q.stop()
         (times.head, times.tail)

@@ -271,18 +271,12 @@ object CentroidRouting {
     * used: 2ⁱ⁸ doubles = 2 MB — well under the reference-object form's
     * workable envelope, but past the point where re-serializing the
     * table into every stage's task binary is measurable waste against a
-    * once-per-executor torrent fetch. Override with
-    * -Dgraft.ann.bcast.doubles; force a carrier for A/B with
-    * -Dgraft.ann.assign=expr|broadcast. */
-  def bcastDoubles: Long =
-    sys.props.get("graft.ann.bcast.doubles").map(_.toLong).getOrElse(1L << 18)
+    * once-per-executor torrent fetch. The table's size is the only
+    * input: both carriers run the same kernel, so the route changes
+    * cost, never output. */
+  val bcastDoubles: Long = 1L << 18
 
-  def useBroadcast(doubles: Long): Boolean =
-    sys.props.get("graft.ann.assign") match {
-      case Some("expr") => false
-      case Some("broadcast") => true
-      case _ => doubles > bcastDoubles
-    }
+  def useBroadcast(doubles: Long): Boolean = doubles > bcastDoubles
 }
 
 /** The k nearest centroid ids by cosine, ordered by (cos desc, cid asc)

@@ -13,9 +13,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Staleness: the manifest's `corpus_rows` is re-validated on load — a
   * cheap one-column scan (the caller supplies the count) that catches
   * the common case of data regenerated in place at a different size,
-  * without paying a content hash of 100 TB. Optionally (set
-  * `SPARK_GRAFT_PAIR_DIGEST=1`) the manifest also records an
-  * order-insensitive ID-SET DIGEST — bit_xor AND modular sum of
+  * without paying a content hash of 100 TB. Artifacts keyed on an id
+  * column (the pair graphs) also record an order-insensitive ID-SET
+  * DIGEST — bit_xor AND modular sum of
   * xxhash64(id), computed in the SAME pruned scan as the count
   * ([[countAndDigest]]) — which additionally catches a corpus edited
   * in place at CONSTANT row count whenever the edit churns the id
@@ -27,8 +27,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Still a staleness tripwire, not a content hash: an edit that only
   * rewrites payloads under unchanged ids passes — for that, clearing
   * the cache dir when the snapshot changes remains the caller's
-  * contract. Off by default because it forces the id column to
-  * actually be read (a bare count over parquet does not).
+  * contract. Price: the id column is actually read (a bare count over
+  * parquet is served from footers), once per lookup, and only when a
+  * cache dir is set.
   *
   * Concurrency: SINGLE WRITER per key (a pipeline materializes each
   * corpus snapshot's artifact once); concurrent readers are safe — the
@@ -77,8 +78,7 @@ private[graft] object FrameDiskCache {
       // manifest written without one — or with only the pre-sum xor
       // field (the old artifact's id set was never fully attested —
       // recompute rather than trust it); a caller without a digest
-      // ignores the fields, so digest-on and digest-off processes
-      // interoperate in the safe direction only
+      // (GroupStats, which has no id column) ignores the fields
       val digestOk = idDigest.forall(d =>
         longField("id_digest").contains(d.xorHash) &&
           longField("id_digest_sum").contains(d.sumHash))
@@ -120,36 +120,25 @@ private[graft] object FrameDiskCache {
     }
   }
 
-  /** Whether callers should attest the id set (env SPARK_GRAFT_PAIR_DIGEST
-    * or -Dgraft.pair.digest; "1"/"on"). One switch for every artifact
-    * family so a pipeline can't half-enable it. */
-  def idDigestEnabled: Boolean =
-    sys.props.get("graft.pair.digest")
-      .orElse(sys.env.get("SPARK_GRAFT_PAIR_DIGEST"))
-      .exists(v => v == "1" || v == "on")
-
-  /** Corpus row count + (when [[idDigestEnabled]]) the order-insensitive
-    * id-set digest, in ONE column-pruned scan — callers were already
-    * paying the count scan; the digest rides the same aggregate. bit_xor
-    * and sum of xxhash64(id) are both partition-order-independent (xor
-    * and addition commute), so the digest is a pure function of the id
+  /** Corpus row count + the order-insensitive id-set digest, in ONE
+    * column-pruned scan — callers were already paying the count scan;
+    * the digest rides the same aggregate. bit_xor and sum of
+    * xxhash64(id) are both partition-order-independent (xor and
+    * addition commute), so the digest is a pure function of the id
     * MULTISET regardless of layout. The sum runs in decimal(38,0) —
     * exact at any corpus size (38 digits ≥ 10¹⁹·rows for any real
     * corpus) where a long sum would overflow, which ANSI mode turns
     * into a job-killing error — and is folded to mod 2⁶⁴ on the driver
     * (BigInteger.longValue keeps exactly the low 64 bits). */
-  def countAndDigest(df: DataFrame, idCol: String): (Long, Option[IdDigest]) = {
+  def countAndDigest(df: DataFrame, idCol: String): (Long, IdDigest) = {
     import org.apache.spark.sql.functions._
-    if (!idDigestEnabled) (df.select(idCol).count(), None)
-    else {
-      val h = xxhash64(col(idCol))
-      val r = df.select(col(idCol))
-        .agg(count(lit(1)), bit_xor(h), sum(h.cast("decimal(38,0)"))).head()
-      val xorHash = if (r.isNullAt(1)) 0L else r.getLong(1)
-      val sumHash =
-        if (r.isNullAt(2)) 0L else r.getDecimal(2).toBigInteger.longValue
-      (r.getLong(0), Some(IdDigest(xorHash, sumHash)))
-    }
+    val h = xxhash64(col(idCol))
+    val r = df.select(col(idCol))
+      .agg(count(lit(1)), bit_xor(h), sum(h.cast("decimal(38,0)"))).head()
+    val xorHash = if (r.isNullAt(1)) 0L else r.getLong(1)
+    val sumHash =
+      if (r.isNullAt(2)) 0L else r.getDecimal(2).toBigInteger.longValue
+    (r.getLong(0), IdDigest(xorHash, sumHash))
   }
 
   private def md5(key: String): String =

@@ -41,25 +41,15 @@ object GroupStats {
   private[graft] def computeCount: java.util.concurrent.atomic.AtomicInteger =
     memo.computeCount
 
-  private def fullKey(corpusKey: String, keys: Seq[String], priceCol: String) =
-    s"stats|$corpusKey|keys=${keys.mkString(",")}|p=$priceCol"
   private def momentsKey(corpusKey: String, keys: Seq[String], priceCol: String) =
     s"moments|$corpusKey|keys=${keys.mkString(",")}|p=$priceCol"
 
-  /** The configured approx-quantile accuracy, if the mega-group escape
-    * hatch is on (`SPARK_GRAFT_APPROX_QUANTILES` / the JVM property). */
-  private def approxAccuracy: Option[Int] =
-    sys.env.get("SPARK_GRAFT_APPROX_QUANTILES")
-      .orElse(Option(System.getProperty("graft.approxQuantiles"))).map(_.toInt)
-
-  /** The ONE place the tier suffix is spelled: table() persists under
-    * this key and moments() looks it up — a format drift between the two
-    * sites would silently kill the cross-process projection (moments
-    * would recompute the corpus instead of erroring). */
-  private def tierKeyOf(corpusKey: String, keys: Seq[String],
-                        priceCol: String, approx: Option[Int]): String =
-    fullKey(corpusKey, keys, priceCol) +
-      approx.map(a => s"|approx=$a").getOrElse("")
+  /** The ONE place the full table's key is spelled: table() persists
+    * under this key and moments() looks it up — a format drift between
+    * the two sites would silently kill the cross-process projection
+    * (moments would recompute the corpus instead of erroring). */
+  private def fullKey(corpusKey: String, keys: Seq[String], priceCol: String) =
+    s"stats|$corpusKey|keys=${keys.mkString(",")}|p=$priceCol"
 
   /** The fused per-group stats table (see [[Anomaly.fullStats]] for the
     * columns), computed once per (session, corpus, keys, price). With
@@ -76,33 +66,23 @@ object GroupStats {
             cacheDir: Option[String] = sys.env.get("SPARK_GRAFT_STATS_CACHE"))
   : DataFrame = {
     val sess = df.sparkSession
-    // Mega-group escape hatch: `SPARK_GRAFT_APPROX_QUANTILES=<accuracy>`
-    // (or the same JVM property) swaps the exact per-group quartile
-    // buffers for approx_percentile's bounded summaries — for corpora
-    // where a single group can hold 10⁷+ values and the exact buffer
-    // concentrates one group's entire value set in one task (measured on
-    // a planted 10M-row mega-group; BENCH_NOTES round 14). Exact is the
-    // default: it is the reference artifacts' contract, and the
-    // approx tier's quartiles are discrete + rank-bounded, not equal.
-    // The cache key carries the tier so the two never alias.
-    val approx = approxAccuracy
-    val tierKey = tierKeyOf(corpusKey, keys, priceCol, approx)
-    def stats(): DataFrame = approx match {
-      case Some(acc) => Anomaly.fullStatsApprox(df, keys, priceCol, acc)
-      case None => Anomaly.fullStats(df, keys, priceCol)
-    }
-    memo.getOrCompute(sess, tierKey) {
+    // Exact quartiles only: they are the reference artifacts' contract
+    // (GoldenReplaySpec). The bounded-state approx tier for mega-groups
+    // is its own catalog query ([[Anomaly.fullStatsApprox]], z6b), never
+    // a silent substitute here.
+    val key = fullKey(corpusKey, keys, priceCol)
+    memo.getOrCompute(sess, key) {
       cacheDir match {
         case Some(root) =>
           // one column-pruned scan for the staleness check (the cheapest
           // column — the first grouping key)
           val nRows = df.select(keys.head).count()
           FrameDiskCache.loadOrCompute(sess, root,
-            tierKey, nRows, "stats.parquet") {
-            stats()
+            key, nRows, "stats.parquet") {
+            Anomaly.fullStats(df, keys, priceCol)
           }
         case None =>
-          stats().localCheckpoint(false)
+          Anomaly.fullStats(df, keys, priceCol).localCheckpoint(false)
       }
     }
   }
@@ -121,16 +101,11 @@ object GroupStats {
   : DataFrame = {
     val sess = df.sparkSession
     memo.getOrCompute(sess, momentsKey(corpusKey, keys, priceCol)) {
-      // either tier projects: the moment columns are the same exact
-      // decimal sums whether the quartiles beside them were exact or not
-      val exactKey = tierKeyOf(corpusKey, keys, priceCol, None)
-      val approxKey = approxAccuracy.map(a =>
-        tierKeyOf(corpusKey, keys, priceCol, Some(a)))
-      val tierKeys = exactKey +: approxKey.toSeq
+      val key = fullKey(corpusKey, keys, priceCol)
       def project(full: DataFrame): DataFrame =
         full.select((keys ++ Seq("n_offers", "s1x", "s2x")).map(
           org.apache.spark.sql.functions.col): _*)
-      tierKeys.view.flatMap(memo.peek(sess, _)).headOption match {
+      memo.peek(sess, key) match {
         case Some(full) => project(full)
         case None =>
           // cross-process: a full-tier artifact persisted by an EARLIER
@@ -143,8 +118,7 @@ object GroupStats {
           // (the FULL table is the family's one disk artifact).
           val fromDisk = cacheDir.flatMap { root =>
             val nRows = df.select(keys.head).count()
-            tierKeys.view.flatMap(k =>
-              FrameDiskCache.load(sess, root, k, nRows, "stats.parquet")).headOption
+            FrameDiskCache.load(sess, root, key, nRows, "stats.parquet")
           }
           fromDisk.map(project).getOrElse(
             Anomaly.momentStats(df, keys, priceCol).localCheckpoint(false))

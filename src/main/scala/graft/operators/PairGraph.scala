@@ -35,8 +35,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * additionally records the corpus row count and re-validates it on
   * load — a cheap one-column scan that catches the common staleness case
   * (data regenerated in place at a different size) without paying a
-  * content hash of 100 TB of text. With `SPARK_GRAFT_PAIR_DIGEST=1` the
-  * same scan also attests an order-insensitive id-set digest
+  * content hash of 100 TB of text. The same scan also attests an
+  * order-insensitive id-set digest
   * ([[FrameDiskCache.countAndDigest]]), catching constant-row-count
   * edits that churn the id set. A corpus edited at constant row count
   * under UNCHANGED ids and an unchanged corpusKey remains the caller's
@@ -121,11 +121,12 @@ object PairGraph {
                         idCol: String, corpusKey: String, p: Params,
                         root: String): DataFrame = {
     // one column-pruned scan of the corpus: feeds the staleness check
-    // (count + optional id-set digest, same aggregate), and neardupPairs'
+    // (count + id-set digest, same aggregate), and neardupPairs'
     // plan choice (which would otherwise count again)
     val (nDocs, digest) = FrameDiskCache.countAndDigest(df, idCol)
     FrameDiskCache.loadOrCompute(sess, root,
-      p.cacheKey(corpusKey, textCol, idCol), nDocs, "pairs.parquet", digest) {
+      p.cacheKey(corpusKey, textCol, idCol), nDocs, "pairs.parquet",
+      Some(digest)) {
       Dedup.neardupPairs(df, textCol, idCol, p.bands,
         p.rowsPerBand, p.threshold, p.shingleN, p.maxBucket,
         p.adaptiveMinDocs, numDocs = Some(nDocs), prefilterK = p.prefilterK)

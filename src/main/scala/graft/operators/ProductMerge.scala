@@ -50,16 +50,9 @@ object ProductMerge {
     *                        anywhere before (plugin path A2); products left
     *                        with no offers disappear
     */
-  /** @param preReduce run the per-product dedup as a hash pre-aggregation
-    *                   before the collect shuffle (map-side combine; the
-    *                   winning plan whenever scrape duplication is
-    *                   non-trivial, i.e. the same (source,url) offer is
-    *                   seen across many runs). With no duplication it adds
-    *                   one aggregation pass over unreduced data — disable
-    *                   for dedup-free inputs. */
   def merge(products: DataFrame, sourceOrder: Seq[String] = PluginOrder,
-            dedupPerProduct: Boolean = true, dedupGlobal: Boolean = false,
-            preReduce: Boolean = true): DataFrame = {
+            dedupPerProduct: Boolean = true,
+            dedupGlobal: Boolean = false): DataFrame = {
     // The empty-id drop is fenced with Opaque: product_id is usually a
     // DERIVED column (EP1: md5/concat over the brand/model cascades), and
     // letting Catalyst push this predicate below the upstream union
@@ -95,7 +88,7 @@ object ProductMerge {
     // dedup executed earlier. At real scrape fan-in (the same offer seen
     // across many runs) the collect shuffle shrinks by the dup factor;
     // the fold's in-pass dedup stays on as an idempotent guard.
-    val preDeduped = if (dedupPerProduct && preReduce) {
+    val preDeduped = if (dedupPerProduct) {
       val payload = struct(
         col("ord"), col("brand"), col("model"), col("product_name"),
         col("category"), col("specifications"), col("sources"),

@@ -24,9 +24,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * corpus are different artifacts (trained centroids differ run to run
   * only if the corpus did, see IvfIndex.train's decimal determinism,
   * but md5-table vs trained must never alias). Same staleness contract
-  * as PairGraph: manifest records the corpus row count (plus, with
-  * `SPARK_GRAFT_PAIR_DIGEST=1`, the id-set digest — see
-  * [[FrameDiskCache.countAndDigest]]), re-validated on load.
+  * as PairGraph: manifest records the corpus row count and the id-set
+  * digest (see [[FrameDiskCache.countAndDigest]]), re-validated on load.
   *
   * Results are identical to calling
   * [[Similarity.semanticNearDupPairsAuto]] directly — the artifact
@@ -85,7 +84,7 @@ object SemanticPairGraph {
         case Some(root) =>
           val (nVecs, digest) = FrameDiskCache.countAndDigest(df, idCol)
           FrameDiskCache.loadOrCompute(sess, root, key, nVecs,
-            "pairs.parquet", digest) {
+            "pairs.parquet", Some(digest)) {
             compute()
           }
         case None => compute().localCheckpoint(false)

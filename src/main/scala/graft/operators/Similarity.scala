@@ -483,11 +483,6 @@ object Similarity {
     // driver rows, require-guarded in [[saltTables]] like the family's
     // other driver collects.
     val saltAbove = 4L * math.max(targetCell, 1)
-    // reference arm: -Dgraft.semdedup.salt=off disables the guard (the
-    // single-task exposure it removes is measured in BENCH_NOTES r15).
-    // Default on; output is identical either way (the spec asserts it),
-    // only task shape differs.
-    val saltEnabled = !sys.props.get("graft.semdedup.salt").contains("off")
     // subcells partition cells, so when no CELL exceeds the threshold no
     // subcell can either — the already-collected cell sizes prove it and
     // the count-agg job is skipped entirely (the common case on
@@ -496,7 +491,7 @@ object Similarity {
     // still bounded: ≤ (1+maxExtraBits)·saltAbove — a corpus-size-
     // independent constant, the documented (1+k)-fold probe cost over
     // the threshold slack, not a scale exposure.
-    val canFlood = saltEnabled && sizes.exists { case (_, n) => n > saltAbove }
+    val canFlood = sizes.exists { case (_, n) => n > saltAbove }
     if (probeSplitBits == 0) {
       val oversized: Array[(Seq[Any], Long)] =
         if (!canFlood) Array.empty
@@ -623,10 +618,7 @@ object Similarity {
       // (output identical either way; no salting scheme can spread an
       // n² loop over T tasks with less than ~√T-fold replication, so
       // above the budget stragglers are inherent — the warn names the
-      // actual fix, a quantizer that matches the corpus). Opt-outs for
-      // pipelines that prefer other behavior: -Dgraft.semdedup.flood=
-      // fail (clean error naming the fix) or =warn (r16's proceed-
-      // unclamped behavior, for A/B measurement of the clamp itself).
+      // actual fix, a quantizer that matches the corpus).
       val replRows = flooded.zip(countsFull).foldLeft(0L) {
         case (acc, ((_, n), (_, s))) => acc + n * s
       }
@@ -635,29 +627,18 @@ object Similarity {
       val counts =
         if (!overBudget) countsFull
         else {
-          val detail = s"salt guard: ${flooded.length} flooded keys hold " +
+          log.warn(s"salt guard: ${flooded.length} flooded keys hold " +
             s"${flooded.map(_._2).sum} rows of a $corpusRows-row corpus; " +
             s"unclamped salting would shuffle ~$replRows replicated rows " +
             f"(${replRows.toDouble / corpusRows}%.1fx the corpus, budget " +
             f"${floodBudgetMult}%.1fx). The quantizer is not splitting " +
             "this corpus — train centroids on it (IvfIndex.train) and " +
             "size nlist to the corpus; raising targetCell only hides " +
-            "the imbalance."
-          sys.props.getOrElse("graft.semdedup.flood", "clamp") match {
-            case "fail" => throw new IllegalStateException(
-              detail + " (-Dgraft.semdedup.flood=fail requested a clean " +
-                "error instead of a clamped run)")
-            case "warn" =>
-              log.warn(detail + " Proceeding UNCLAMPED " +
-                "(-Dgraft.semdedup.flood=warn). Output is unaffected.")
-              countsFull
-            case _ =>
-              log.warn(detail + " Clamping per-key salt factors to the " +
-                "replication budget (water-filled: largest keys get the " +
-                "most groups); keys the budget cannot spread run " +
-                "unsalted. Output is unaffected.")
-              clampSaltCounts(flooded, targetCell, budget)
-          }
+            "the imbalance. Clamping per-key salt factors to the " +
+            "replication budget (water-filled: largest keys get the " +
+            "most groups); keys the budget cannot spread run " +
+            "unsalted. Output is unaffected.")
+          clampSaltCounts(flooded, targetCell, budget)
         }
       // a clamped-to-1 key is identity salting — drop it from the tables
       // so its rows take the plain-join path instead of paying the
@@ -903,11 +884,8 @@ object Similarity {
       // 4·targetCell — zero extra jobs, output unchanged (the oracles
       // and the spec's equality-to-standalone-form both still hold).
       val saltAbove = 4L * math.max(targetCell, 1)
-      val saltEnabled = !sys.props.get("graft.semdedup.salt").contains("off")
       val over: Seq[(Seq[Any], Long)] =
-        if (saltEnabled)
-          sizes.collect { case (cid, n) if n > saltAbove => (Seq[Any](cid), n) }.toSeq
-        else Seq.empty
+        sizes.collect { case (cid, n) if n > saltAbove => (Seq[Any](cid), n) }.toSeq
       val salt = saltTables(df.sparkSession,
         Seq("centroid" -> org.apache.spark.sql.types.IntegerType),
         over, targetCell, sizes.map(_._2).sum)

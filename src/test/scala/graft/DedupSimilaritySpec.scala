@@ -381,28 +381,25 @@ class DedupSimilaritySpec extends SparkSuite {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .where(col("vec_id") < 500)
     val cents = Similarity.md5Centroids(64, 64)
-    def withProp[T](k: String, v: String)(f: => T): T = {
-      val prev = sys.props.get(k); sys.props(k) = v
-      try f finally { prev match {
-        case Some(p) => sys.props(k) = p; case None => sys.props -= k } }
-    }
-    def byId(df: org.apache.spark.sql.DataFrame): Map[Long, Int] =
-      df.select("vec_id", "centroid").collect()
+    // both carriers built directly over ONE table
+    val bc = spark.sparkContext.broadcast(CentroidTable.sorted(cents))
+    def byId(c: org.apache.spark.sql.Column): Map[Long, Int] =
+      emb.select(col("vec_id"), c).collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val viaExpr = withProp("graft.ann.assign", "expr")(
-      byId(Similarity.IvfIndex.assign(emb, "embedding", cents)))
-    val viaBcast = withProp("graft.ann.assign", "broadcast")(
-      byId(Similarity.IvfIndex.assign(emb, "embedding", cents)))
+    val viaExpr = byId(NearestCentroid.column(col("embedding"), cents))
+    val viaBcast = byId(NearestCentroid.columnBroadcast(col("embedding"), bc))
     assert(viaBcast == viaExpr && viaExpr.values.toSet.size > 1)
-    def probes(): Map[Long, List[Int]] = emb.select(col("vec_id"),
-        TopCentroids.auto(col("embedding"), cents, 5, spark).as("pr"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toList).toMap
-    val prExpr = withProp("graft.ann.assign", "expr")(probes())
-    val prBcast = withProp("graft.ann.assign", "broadcast")(probes())
+    def probes(c: org.apache.spark.sql.Column): Map[Long, List[Int]] =
+      emb.select(col("vec_id"), c).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Int](1).toList).toMap
+    val prExpr = probes(TopCentroids.column(col("embedding"), cents, 5))
+    val prBcast = probes(TopCentroids.columnBroadcast(col("embedding"), bc, 5))
     assert(prBcast == prExpr)
-    // the broadcast plan really uses the bcast expression
-    val planned = withProp("graft.ann.assign", "broadcast")(
-      Similarity.IvfIndex.assign(emb, "embedding", cents))
+    bc.destroy()
+    // the auto route over a table above the line really plans the bcast
+    // expression (analysis only — nothing executes)
+    val planned = Similarity.IvfIndex.assign(emb, "embedding",
+      Similarity.md5Centroids(8192, 64))
     assert(planned.queryExecution.analyzed.toString
       .contains("graft_nearest_centroid_bcast"))
     // the handle is what rides the task binary: at nlist=4096×64 the
@@ -660,8 +657,8 @@ class DedupSimilaritySpec extends SparkSuite {
   }
 
   test("flood-majority clamp: past the replication budget per-key salt " +
-      "factors are clamped worst-first; clamped, unclamped and unsalted " +
-      "runs emit identical pairs; flood=fail throws") {
+      "factors are clamped worst-first; the clamped run emits exactly the " +
+      "capped and probed contracts") {
     // same blast shape as the point-mass test, sized so Σ n·saltCount
     // over flooded keys exceeds the 3×-corpus replication budget — the
     // planted flood-MAJORITY regime (r16 measured it at 2.4M vectors /
@@ -685,28 +682,28 @@ class DedupSimilaritySpec extends SparkSuite {
       .map(n => n * Similarity.saltCount(n, 1)).sum
     assert(unclampedRepl > 3L * corpusRows,
       s"fixture must exceed the budget: repl=$unclampedRepl corpus=$corpusRows")
-    def withProp[T](k: String, v: String)(f: => T): T = {
-      val prev = sys.props.get(k); sys.props(k) = v
-      try f finally { prev match {
-        case Some(p) => sys.props(k) = p; case None => sys.props -= k } }
-    }
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    def run(probeBits: Int) = rows(Similarity.semanticNearDupPairsCapped(
-      planted, "vec_id", "embedding", cents, 0.3, targetCell = 1,
-      maxExtraBits = 8, probeSplitBits = probeBits))
+    // independent reference, derived as in the point-mass test: uncapped
+    // pairs whose members share the (centroid, subcell) key, and for
+    // probeSplitBits = 1 those whose subcells differ in ≤ 1 bit
+    val uncapped = rows(Similarity.semanticNearDupPairs(
+      planted, "vec_id", "embedding", cents, 0.3))
+    val keyOf = Similarity.cappedSubcellKeys(planted, "vec_id", "embedding",
+        cents, targetCell = 1, maxExtraBits = 8)
+      .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2))).toMap
+    val expect = Map(
+      0 -> uncapped.filter { case (a, b, _) => keyOf(a) == keyOf(b) },
+      1 -> uncapped.filter { case (a, b, _) =>
+        keyOf(a)._1 == keyOf(b)._1 &&
+          java.lang.Long.bitCount(keyOf(a)._2 ^ keyOf(b)._2) <= 1 })
     for (pb <- Seq(0, 1)) {
-      val clamped = run(pb) // default mode
-      val unclamped = withProp("graft.semdedup.flood", "warn")(run(pb))
-      val unsalted = withProp("graft.semdedup.salt", "off")(run(pb))
-      assert(clamped == unsalted && clamped.nonEmpty,
+      val clamped = rows(Similarity.semanticNearDupPairsCapped(
+        planted, "vec_id", "embedding", cents, 0.3, targetCell = 1,
+        maxExtraBits = 8, probeSplitBits = pb))
+      assert(clamped == expect(pb) && clamped.nonEmpty,
         s"probeBits=$pb: clamp changed the output")
-      assert(unclamped == unsalted, s"probeBits=$pb")
     }
-    // fail mode: a clean error naming the fix, raised at plan time
-    val ex = withProp("graft.semdedup.flood", "fail")(
-      intercept[IllegalStateException](run(0)))
-    assert(ex.getMessage.contains("train centroids"))
     // clampSaltCounts invariants (water-filling): the smallest feasible
     // per-group target T serves the LARGEST keys the most groups, Σ n·s
     // stays inside the budget, keys below 2 groups run unsalted

@@ -207,26 +207,6 @@ class GroupStatsSpec extends SparkSuite {
     }
   }
 
-  test("approx-quantile escape hatch: graft.approxQuantiles routes the " +
-      "table to the approx tier under its own cache key") {
-    GroupStats.clearInProcess()
-    val exactT = GroupStats.table(offers(), Seq("k"), "price", "test#hatch")
-    System.setProperty("graft.approxQuantiles", "1000")
-    try {
-      val approxT = GroupStats.table(offers(), Seq("k"), "price", "test#hatch")
-      assert(!(approxT eq exactT), "tiers must not alias in the memo")
-      // approx quartiles are discrete elements; exact ones interpolate —
-      // group a (100,200,300,600) has exact q1=175, approx ∈ group
-      val aRow = approxT.where(col("k") === "a").collect()(0)
-      assert(Set(100.0, 200.0, 300.0, 600.0).contains(aRow.getAs[Double]("q1")))
-      // the moments tier may project from EITHER tier — values identical
-      val m = GroupStats.moments(offers(), Seq("k"), "price", "test#hatch")
-      val direct = Anomaly.momentStats(offers(), Seq("k"), "price")
-        .collect().map(_.toSeq).toSet
-      assert(m.collect().map(_.toSeq).toSet == direct)
-    } finally System.clearProperty("graft.approxQuantiles")
-  }
-
   test("FrameMemo context-stop eviction covers newSession() clones") {
     val memo = new FrameMemo
     val clone = spark.newSession()

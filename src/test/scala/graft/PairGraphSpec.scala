@@ -128,55 +128,58 @@ class PairGraphSpec extends SparkSuite {
     assert(scala.io.Source.fromFile(manifest).mkString != stamp1)
   }
 
-  test("id-set digest (SPARK_GRAFT_PAIR_DIGEST): a corpus edited at " +
-      "CONSTANT row count but with churned ids misses and recomputes; " +
-      "a digest-less artifact is refused by a digest-carrying reader") {
+  test("id-set digest: a corpus edited at CONSTANT row count but with " +
+      "churned ids misses and recomputes; a digest-less artifact is " +
+      "refused by a digest-carrying reader") {
+    import graft.operators.FrameDiskCache
     val root = tempDir("pairgraph-digest")
-    // digest OFF: the artifact's manifest carries no id attestation
-    PairGraph.clearInProcess()
-    PairGraph.pairs(corpus(), "text", "doc_id", "test#digest", p,
-      cacheDir = Some(root)).collect()
+    // a digest-less manifest under the pair artifact's own key — the
+    // shape GroupStats writes (no id column to attest). Its data is an
+    // EMPTY pair set, so serving it would show in the output too.
+    val direct = Dedup.neardupPairs(corpus(), "text", "doc_id", p.bands,
+        p.rowsPerBand, p.threshold, p.shingleN, p.maxBucket, p.adaptiveMinDocs)
+    FrameDiskCache.loadOrCompute(spark, root,
+      p.cacheKey("test#digest", "text", "doc_id"), corpus().count(),
+      "pairs.parquet", idDigest = None)(direct.limit(0))
     val sub = new java.io.File(root).listFiles().filter(_.isDirectory)
     assert(sub.length == 1)
     val manifest = new java.io.File(sub.head, "manifest.json")
     val stamp0 = scala.io.Source.fromFile(manifest).mkString
     assert(!stamp0.contains("id_digest"))
 
-    sys.props("graft.pair.digest") = "1"
-    try {
-      // safe-direction interop: the digest-on reader refuses the
-      // unattested artifact and recomputes with the digest recorded
-      PairGraph.clearInProcess()
-      val attested = PairGraph.pairs(corpus(), "text", "doc_id",
-        "test#digest", p, cacheDir = Some(root)).collect().map(_.toSeq).toSet
-      val stamp1 = scala.io.Source.fromFile(manifest).mkString
-      assert(stamp1.contains("id_digest") && stamp1 != stamp0)
+    // the digest-carrying reader refuses the unattested artifact and
+    // recomputes with the digest recorded
+    PairGraph.clearInProcess()
+    val attested = PairGraph.pairs(corpus(), "text", "doc_id",
+      "test#digest", p, cacheDir = Some(root)).collect().map(_.toSeq).toSet
+    assert(attested == direct.collect().map(_.toSeq).toSet && attested.nonEmpty)
+    val stamp1 = scala.io.Source.fromFile(manifest).mkString
+    assert(stamp1.contains("id_digest") && stamp1 != stamp0)
 
-      // unchanged corpus: hit (manifest untouched)
-      PairGraph.clearInProcess()
-      val again = PairGraph.pairs(corpus(), "text", "doc_id",
-        "test#digest", p, cacheDir = Some(root)).collect().map(_.toSeq).toSet
-      assert(again == attested)
-      assert(scala.io.Source.fromFile(manifest).mkString == stamp1)
+    // unchanged corpus: hit (manifest untouched)
+    PairGraph.clearInProcess()
+    val again = PairGraph.pairs(corpus(), "text", "doc_id",
+      "test#digest", p, cacheDir = Some(root)).collect().map(_.toSeq).toSet
+    assert(again == attested)
+    assert(scala.io.Source.fromFile(manifest).mkString == stamp1)
 
-      // the r15-verdict staleness gap: SAME row count, one id swapped
-      // (the exact-dup doc 4 becomes doc 6 — row count 5 either way).
-      // Row-count-only validation served the stale artifact here; the
-      // digest must miss and recompute against the edited corpus.
-      PairGraph.clearInProcess()
-      val edited = corpus().withColumn("doc_id",
-        when(col("doc_id") === 4L, 6L).otherwise(col("doc_id")))
-      assert(edited.count() == corpus().count())
-      val third = PairGraph.pairs(edited, "text", "doc_id",
-        "test#digest", p, cacheDir = Some(root)).collect().map(_.toSeq).toSet
-      val directEdited = Dedup.neardupPairs(edited, "text", "doc_id",
-          p.bands, p.rowsPerBand, p.threshold, p.shingleN, p.maxBucket,
-          p.adaptiveMinDocs)
-        .collect().map(_.toSeq).toSet
-      assert(third == directEdited && third != attested,
-        "digest must catch the constant-row-count id churn")
-      assert(scala.io.Source.fromFile(manifest).mkString != stamp1)
-    } finally sys.props -= "graft.pair.digest"
+    // the r15-verdict staleness gap: SAME row count, one id swapped
+    // (the exact-dup doc 4 becomes doc 6 — row count 5 either way).
+    // Row-count-only validation served the stale artifact here; the
+    // digest must miss and recompute against the edited corpus.
+    PairGraph.clearInProcess()
+    val edited = corpus().withColumn("doc_id",
+      when(col("doc_id") === 4L, 6L).otherwise(col("doc_id")))
+    assert(edited.count() == corpus().count())
+    val third = PairGraph.pairs(edited, "text", "doc_id",
+      "test#digest", p, cacheDir = Some(root)).collect().map(_.toSeq).toSet
+    val directEdited = Dedup.neardupPairs(edited, "text", "doc_id",
+        p.bands, p.rowsPerBand, p.threshold, p.shingleN, p.maxBucket,
+        p.adaptiveMinDocs)
+      .collect().map(_.toSeq).toSet
+    assert(third == directEdited && third != attested,
+      "digest must catch the constant-row-count id churn")
+    assert(scala.io.Source.fromFile(manifest).mkString != stamp1)
   }
 
   test("digest xor-cancellation closed: swapping a PAIR of duplicate ids " +
@@ -193,30 +196,27 @@ class PairGraphSpec extends SparkSuite {
       (id, "the quick brown fox jumps over the lazy dog"),
       (5L, "completely unrelated words nothing shared here at all")
     ).toDF("doc_id", "text")
-    sys.props("graft.pair.digest") = "1"
-    try {
-      PairGraph.clearInProcess()
-      val first = PairGraph.pairs(dupCorpus(4L), "text", "doc_id",
-        "test#xorcancel", p, cacheDir = Some(root)).collect().map(_.toSeq).toSet
-      // sanity: the xor really does cancel on this edit (the blind spot
-      // this test pins closed), while the sum moves
-      val (n4, d4) = graft.operators.FrameDiskCache.countAndDigest(
-        dupCorpus(4L), "doc_id")
-      val (n6, d6) = graft.operators.FrameDiskCache.countAndDigest(
-        dupCorpus(6L), "doc_id")
-      assert(n4 == n6 && d4.get.xorHash == d6.get.xorHash,
-        "fixture must xor-cancel — ids no longer duplicated?")
-      assert(d4.get.sumHash != d6.get.sumHash)
-      PairGraph.clearInProcess()
-      val swapped = PairGraph.pairs(dupCorpus(6L), "text", "doc_id",
-        "test#xorcancel", p, cacheDir = Some(root)).collect().map(_.toSeq).toSet
-      val directSwapped = Dedup.neardupPairs(dupCorpus(6L), "text", "doc_id",
-          p.bands, p.rowsPerBand, p.threshold, p.shingleN, p.maxBucket,
-          p.adaptiveMinDocs)
-        .collect().map(_.toSeq).toSet
-      assert(swapped == directSwapped && swapped != first,
-        "sum digest must catch the xor-cancelling duplicate-pair swap")
-    } finally sys.props -= "graft.pair.digest"
+    PairGraph.clearInProcess()
+    val first = PairGraph.pairs(dupCorpus(4L), "text", "doc_id",
+      "test#xorcancel", p, cacheDir = Some(root)).collect().map(_.toSeq).toSet
+    // sanity: the xor really does cancel on this edit (the blind spot
+    // this test pins closed), while the sum moves
+    val (n4, d4) = graft.operators.FrameDiskCache.countAndDigest(
+      dupCorpus(4L), "doc_id")
+    val (n6, d6) = graft.operators.FrameDiskCache.countAndDigest(
+      dupCorpus(6L), "doc_id")
+    assert(n4 == n6 && d4.xorHash == d6.xorHash,
+      "fixture must xor-cancel — ids no longer duplicated?")
+    assert(d4.sumHash != d6.sumHash)
+    PairGraph.clearInProcess()
+    val swapped = PairGraph.pairs(dupCorpus(6L), "text", "doc_id",
+      "test#xorcancel", p, cacheDir = Some(root)).collect().map(_.toSeq).toSet
+    val directSwapped = Dedup.neardupPairs(dupCorpus(6L), "text", "doc_id",
+        p.bands, p.rowsPerBand, p.threshold, p.shingleN, p.maxBucket,
+        p.adaptiveMinDocs)
+      .collect().map(_.toSeq).toSet
+    assert(swapped == directSwapped && swapped != first,
+      "sum digest must catch the xor-cancelling duplicate-pair swap")
   }
 
   test("manifest validation is parsed JSON, not substring search: a key " +
@@ -241,11 +241,7 @@ class PairGraphSpec extends SparkSuite {
     // never fully attested under the two-aggregate scheme)
     val dir = new java.io.File(root).listFiles().filter(_.isDirectory).head
     val mf = new java.io.File(dir, "manifest.json")
-    val (_, trueDigest) = {
-      sys.props("graft.pair.digest") = "1"
-      try FrameDiskCache.countAndDigest(df, "id")
-      finally sys.props -= "graft.pair.digest"
-    }
+    val (_, trueDigest) = FrameDiskCache.countAndDigest(df, "id")
     def rewrite(content: String): Unit = {
       // drop the local-FS checksum sibling too, or the hand-edited
       // manifest fails the Hadoop CRC on read instead of parsing
@@ -254,9 +250,9 @@ class PairGraphSpec extends SparkSuite {
     }
     rewrite(s"""{"key":${"\"" + evilKey.replace("\\", "\\\\")
       .replace("\"", "\\\"") + "\""},"corpus_rows":5,""" +
-      s""""id_digest":${trueDigest.get.xorHash},"created_ms":1}""")
+      s""""id_digest":${trueDigest.xorHash},"created_ms":1}""")
     assert(FrameDiskCache.load(spark, root, evilKey, 5L, "data.parquet",
-      trueDigest).isEmpty)
+      Some(trueDigest)).isEmpty)
     // while a digest-less reader still accepts it (safe-direction interop)
     assert(FrameDiskCache.load(spark, root, evilKey, 5L, "data.parquet").isDefined)
     // a corrupt manifest is a MISS, not an error

@@ -86,40 +86,37 @@ class SemanticPairGraphSpec extends SparkSuite {
   }
 
   test("id-set digest: constant-row-count id churn invalidates the " +
-      "semantic pair artifact when SPARK_GRAFT_PAIR_DIGEST is on") {
+      "semantic pair artifact") {
     val root = tempDir("sempairgraph-digest")
-    sys.props("graft.pair.digest") = "1"
-    try {
-      SemanticPairGraph.clearInProcess()
-      val first = SemanticPairGraph.pairs(corpus(), "vec_id", "embedding",
-          cents, "test#semdigest", p, cacheDir = Some(root))
-        .collect().map(_.toSeq).toSet
-      val sub = new java.io.File(root).listFiles().filter(_.isDirectory)
-      assert(sub.length == 1)
-      val manifest = new java.io.File(sub.head, "manifest.json")
-      val stamp1 = scala.io.Source.fromFile(manifest).mkString
-      assert(stamp1.contains("id_digest"))
+    SemanticPairGraph.clearInProcess()
+    val first = SemanticPairGraph.pairs(corpus(), "vec_id", "embedding",
+        cents, "test#semdigest", p, cacheDir = Some(root))
+      .collect().map(_.toSeq).toSet
+    val sub = new java.io.File(root).listFiles().filter(_.isDirectory)
+    assert(sub.length == 1)
+    val manifest = new java.io.File(sub.head, "manifest.json")
+    val stamp1 = scala.io.Source.fromFile(manifest).mkString
+    assert(stamp1.contains("id_digest"))
 
-      // same ids → hit
-      SemanticPairGraph.clearInProcess()
-      val second = SemanticPairGraph.pairs(corpus(), "vec_id", "embedding",
-          cents, "test#semdigest", p, cacheDir = Some(root))
-        .collect().map(_.toSeq).toSet
-      assert(second == first)
-      assert(scala.io.Source.fromFile(manifest).mkString == stamp1)
+    // same ids → hit
+    SemanticPairGraph.clearInProcess()
+    val second = SemanticPairGraph.pairs(corpus(), "vec_id", "embedding",
+        cents, "test#semdigest", p, cacheDir = Some(root))
+      .collect().map(_.toSeq).toSet
+    assert(second == first)
+    assert(scala.io.Source.fromFile(manifest).mkString == stamp1)
 
-      // shift every id by 1000: SAME row count, churned id set — the
-      // row-count check alone would serve the stale pair set (whose ids
-      // no longer exist in the corpus); the digest must recompute
-      SemanticPairGraph.clearInProcess()
-      val edited = corpus().withColumn("vec_id", col("vec_id") + 1000L)
-      assert(edited.count() == corpus().count())
-      val third = SemanticPairGraph.pairs(edited, "vec_id", "embedding",
-          cents, "test#semdigest", p, cacheDir = Some(root))
-        .collect().map(_.toSeq).toSet
-      assert(third.nonEmpty && third != first,
-        "digest must catch the constant-row-count id churn")
-      assert(scala.io.Source.fromFile(manifest).mkString != stamp1)
-    } finally sys.props -= "graft.pair.digest"
+    // shift every id by 1000: SAME row count, churned id set — the
+    // row-count check alone would serve the stale pair set (whose ids
+    // no longer exist in the corpus); the digest must recompute
+    SemanticPairGraph.clearInProcess()
+    val edited = corpus().withColumn("vec_id", col("vec_id") + 1000L)
+    assert(edited.count() == corpus().count())
+    val third = SemanticPairGraph.pairs(edited, "vec_id", "embedding",
+        cents, "test#semdigest", p, cacheDir = Some(root))
+      .collect().map(_.toSeq).toSet
+    assert(third.nonEmpty && third != first,
+      "digest must catch the constant-row-count id churn")
+    assert(scala.io.Source.fromFile(manifest).mkString != stamp1)
   }
 }
