@@ -4,7 +4,11 @@
 # stage is one spark-submit of graft.pipeline.StageRunner, and stages hand
 # off through parquet stage dirs instead of JSON files on a shared volume.
 # StageRunner sets its own session conf (graft.SparkEntry.session), so the
-# tasks pass none.
+# tasks pass none. On a local master (`local[*]`) that conf includes the
+# shuffle partition count, half the threads; on a cluster the width is the
+# deployer's, and with none passed here Spark's default of 200 applies:
+# set spark.sql.shuffle.partitions through the connection or the operator's
+# conf to size it to the day's data.
 #
 # Requires: apache-airflow + apache-airflow-providers-apache-spark
 # (public packages), a Spark cluster (or local[*]) reachable from the

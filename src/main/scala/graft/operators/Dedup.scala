@@ -857,33 +857,6 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
   }
 
-  /** Prefix-filtered exact n-gram Jaccard (All-Pairs/PPJoin prefix filter,
-    * Bayardo et al. WWW'07 / Xiao et al. WWW'08) — the high-threshold
-    * scale path of [[ngramJaccardPairs]]. Same output for any threshold
-    * (lossless), but candidate volume scales with (1−t)·|grams| instead
-    * of |grams|: at t=0.8 only the rarest ~20% of each document's grams
-    * are indexed, so the pair blow-up of the full inverted index never
-    * materializes. At t=0.05 the prefix is ~95% of each set and the
-    * extra verify joins make it strictly worse than the counting
-    * formulation — use [[ngramJaccardPairs]] there.
-    *
-    * Prefix lemma (proved via the minimal shared element): order grams by
-    * a global total order (here: ascending document frequency, then gram —
-    * rarest first minimizes postings). If |A∩B| ≥ α then the smallest
-    * shared gram lies within the first |A|−α+1 grams of A AND the first
-    * |B|−α+1 of B, so indexing only those prefixes finds every qualifying
-    * pair. jaccard ≥ t implies |A'∩B'| ≥ t·|A| per side (A' = df-capped
-    * set; the capped intersection is what the counting formulation scores
-    * too), giving α = ⌈t·|A|⌉. The bound is relaxed by the result's
-    * 4-decimal rounding (accepts j ≥ t−5e−5) and an fp guard, keeping the
-    * filter strictly lossless.
-    *
-    * Scale shape: one shuffle to build the df table, one groupBy to order
-    * each document's grams (state bounded by document size), candidate
-    * generation over prefix postings only (posting lists are ≤ maxDf by
-    * construction — the df cap doubles as the bucket cap), then the
-    * standard SHUFFLE_HASH verify on sorted hash sets. Nothing O(corpus)
-    * is broadcast or collected. */
   /** Which exact-jaccard formulation to run, from corpus size and
     * threshold — the measured crossover (BENCH_NOTES "d4 → d4b
     * crossover"), not asymptotics asserted:
@@ -927,6 +900,33 @@ object Dedup {
     }
   }
 
+  /** Prefix-filtered exact n-gram Jaccard (All-Pairs/PPJoin prefix filter,
+    * Bayardo et al. WWW'07 / Xiao et al. WWW'08) — the high-threshold
+    * scale path of [[ngramJaccardPairs]]. Same output for any threshold
+    * (lossless), but candidate volume scales with (1−t)·|grams| instead
+    * of |grams|: at t=0.8 only the rarest ~20% of each document's grams
+    * are indexed, so the pair blow-up of the full inverted index never
+    * materializes. At t=0.05 the prefix is ~95% of each set and the
+    * extra verify joins make it strictly worse than the counting
+    * formulation — use [[ngramJaccardPairs]] there.
+    *
+    * Prefix lemma (proved via the minimal shared element): order grams by
+    * a global total order (here: ascending document frequency, then gram —
+    * rarest first minimizes postings). If |A∩B| ≥ α then the smallest
+    * shared gram lies within the first |A|−α+1 grams of A AND the first
+    * |B|−α+1 of B, so indexing only those prefixes finds every qualifying
+    * pair. jaccard ≥ t implies |A'∩B'| ≥ t·|A| per side (A' = df-capped
+    * set; the capped intersection is what the counting formulation scores
+    * too), giving α = ⌈t·|A|⌉. The bound is relaxed by the result's
+    * 4-decimal rounding (accepts j ≥ t−5e−5) and an fp guard, keeping the
+    * filter strictly lossless.
+    *
+    * Scale shape: one shuffle to build the df table, one groupBy to order
+    * each document's grams (state bounded by document size), candidate
+    * generation over prefix postings only (posting lists are ≤ maxDf by
+    * construction — the df cap doubles as the bucket cap), then the
+    * standard SHUFFLE_HASH verify on sorted hash sets. Nothing O(corpus)
+    * is broadcast or collected. */
   def prefixJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                          blockCol: String, n: Int, threshold: Double,
                          maxDf: Int = 500): DataFrame = {

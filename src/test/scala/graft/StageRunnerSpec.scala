@@ -81,6 +81,44 @@ class StageRunnerSpec extends SparkSuite {
     assert(Files.list(Paths.get(out, "relational", "offers")).count() > 0)
   }
 
+  test("stage chain output is identical at Spark's 200 shuffle partitions and at the filled width") {
+    val raw = tempDir("sw_raw")
+    write(raw, "avito_ads.json", avitoJson)
+    write(raw, "jumia_products.json", jumiaJson)
+    write(raw, "electroplanet_data.json", electroJson)
+    val width = "spark.sql.shuffle.partitions"
+    // a stage output's schema, then its rows in sorted order with map
+    // columns as key-sorted entries: the same under any partitioning if
+    // the output is
+    def rows(dir: String): Seq[String] = {
+      import org.apache.spark.sql.functions._
+      val df = spark.read.parquet(dir)
+      df.schema.json +: df.select(df.schema.fields.toSeq.map { f => f.dataType match {
+        case _: org.apache.spark.sql.types.MapType => array_sort(map_entries(col(f.name))).as(f.name)
+        case _ => col(f.name)
+      }}: _*).toJSON.collect().toSeq.sorted
+    }
+    def chain(set: Option[String], expected: String): (Seq[String], Seq[String], Seq[String]) =
+      withConf(width, set) {
+        val stage = tempDir("sw_stage")
+        Seq("extract_avito", "extract_jumia", "extract_electroplanet").foreach { s =>
+          StageRunner.main(Array(s, raw, stage, "20260101_120000"))
+        }
+        Seq("merge", "stats", "anomalies").foreach(s => StageRunner.main(Array(s, stage)))
+        assert(spark.conf.get(width) == expected)
+        val stats = spark.read.text(s"$stage/statistics").collect().map(_.getString(0)).toSeq.sorted
+        (rows(s"$stage/merged"), rows(s"$stage/anomalies"), stats)
+      }
+    val (merged200, anomalies200, stats200) = chain(Some("200"), "200")
+    val (merged, anomalies, stats) = chain(None, "4")
+    // the fixture's groups are too small to flag an offer: the anomaly
+    // stage's output is empty at both widths, and only its schema is compared
+    assert(merged200.size == 1 + 4 && stats200.nonEmpty)
+    assert(merged == merged200)
+    assert(anomalies == anomalies200)
+    assert(stats == stats200)
+  }
+
   test("decimal money view: DECIMAL(12,2) offers through the JDBC sink, doubles by default") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
