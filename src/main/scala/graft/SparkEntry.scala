@@ -25,21 +25,19 @@ object SparkEntry {
     * otherwise the session is `local[SPARK_GRAFT_CPUS]` (default: every
     * core). A local session whose shuffle width nobody set (in SparkConf,
     * a spark-submit `--conf`, a builder or the runtime conf) gets
-    * [[localWidth]]; a width someone set, and any non-local master, keep
-    * their own. On an existing session getOrCreate applies the runtime
+    * [[filledWidth]]; a width someone set, and any non-local master, keep
+    * their own. The filled width is a runtime setting of the returned
+    * session, so a `newSession()` clone starts without it
+    * (`Queries.streamSession` sets its own). On an existing session getOrCreate applies the runtime
     * SQL settings below to it and leaves its static ones and its log
     * level alone. */
   def session(): SparkSession = {
     val existing = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).isDefined
     val b = SparkSession.builder().appName("marketeye-spark")
-    val conf = new SparkConf()
-    if (!existing && !conf.contains("spark.master")) {
+    if (!existing && !new SparkConf().contains("spark.master")) {
       val n = sys.env.getOrElse("SPARK_GRAFT_CPUS",
         Runtime.getRuntime.availableProcessors.toString).toInt
-      val master = s"local[$n]"
-      b.master(master)
-      // set at build time, so newSession() clones inherit it too
-      if (!conf.contains(ShufflePartitions)) b.config(ShufflePartitions, localWidth(master).get)
+      b.master(s"local[$n]")
     }
     val spark = b
       .config("spark.sql.adaptive.enabled", "true")
@@ -75,27 +73,33 @@ object SparkEntry {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     // getAll holds the explicitly set entries only, never Spark's defaults
-    if (!spark.conf.getAll.contains(ShufflePartitions))
-      localWidth(spark.sparkContext.master).foreach(spark.conf.set(ShufflePartitions, _))
+    filledWidth(spark.sparkContext.isLocal, spark.sparkContext.master,
+      spark.conf.getAll.contains(ShufflePartitions))
+      .foreach(spark.conf.set(ShufflePartitions, _))
     if (!existing) spark.sparkContext.setLogLevel("WARN")
     spark
   }
 
   private val ShufflePartitions = "spark.sql.shuffle.partitions"
-  private val LocalMaster = """local\[(\*|\d+)(?:\s*,\s*\d+)?\]""".r
+  // the thread count of a master Spark deems local: local[n], local[*],
+  // local[n,f]; plain "local" is one thread
+  private val LocalThreads = """local\[(\*|\d+).*""".r
 
-  /** The shuffle width of a local master: HALF its threads, measured
-    * fastest across the catalog (32 reducers on local[32] pay more
-    * per-task scheduling than the extra width buys at sf0.1;
+  /** The shuffle width [[session]] fills in: HALF the local threads,
+    * measured fastest across the catalog (32 reducers on local[32] pay
+    * more per-task scheduling than the extra width buys at sf0.1;
     * explode-amplified stages re-widen explicitly — see
-    * Dedup.pairsFromGroups), and far below Spark's 200, whose per-map-task
-    * shuffle files dominate EP1's merge and anomaly stages at a daily
-    * drop's size. AQE still coalesces below this. None for a non-local
-    * master: on a cluster the deployer tunes the width to data volume. */
-  private[graft] def localWidth(master: String): Option[Int] = (master match {
-    case "local" => Some(1)
-    case LocalMaster("*") => Some(Runtime.getRuntime.availableProcessors)
-    case LocalMaster(n) => Some(n.toInt)
-    case _ => None
-  }).map(n => math.max(1, n / 2))
+    * Dedup.pairsFromGroups), and far below Spark's 200, whose
+    * per-map-task shuffle files dominate EP1's merge and anomaly stages at
+    * a daily drop's size. AQE still coalesces below this. None when
+    * someone set a width, or when Spark does not deem the master local
+    * (`SparkContext.isLocal`): on a cluster the deployer tunes the width
+    * to data volume. */
+  private[graft] def filledWidth(isLocal: Boolean, master: String, widthSet: Boolean): Option[Int] =
+    if (!isLocal || widthSet) None
+    else Some(math.max(1, (master match {
+      case LocalThreads("*") => Runtime.getRuntime.availableProcessors
+      case LocalThreads(n) => n.toInt
+      case _ => 1
+    }) / 2))
 }

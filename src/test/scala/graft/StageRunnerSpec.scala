@@ -83,7 +83,13 @@ class StageRunnerSpec extends SparkSuite {
 
   test("stage chain output is identical at Spark's 200 shuffle partitions and at the filled width") {
     val raw = tempDir("sw_raw")
-    write(raw, "avito_ads.json", avitoJson)
+    // four more S24 Ultra ads, so that product's offer group holds 7 and
+    // its priciest offer (Jumia's) flags: with the sample σ and k = 2 no
+    // offer can flag in a group of fewer than 6
+    val moreAds = (10 to 13).map { i =>
+      s"""{"ad_id":"$i","title":"Samsung Galaxy S24 Ultra 512GB","price":"8.${i - 4}00,00","city":"Rabat","seller_type":"STORE","seller_name":"Store$i","url":"https://www.avito.ma/vi/$i.htm","list_time":"2026-01-01T10:00:00","brand":"SAMSUNG","model":"S24 ULTRA","storage":"512GB","ram":"12GB","condition":"NEUF"}"""
+    }
+    write(raw, "avito_ads.json", avitoJson.replace("\n]", moreAds.map(",\n" + _).mkString + "\n]"))
     write(raw, "jumia_products.json", jumiaJson)
     write(raw, "electroplanet_data.json", electroJson)
     val width = "spark.sql.shuffle.partitions"
@@ -111,9 +117,7 @@ class StageRunnerSpec extends SparkSuite {
       }
     val (merged200, anomalies200, stats200) = chain(Some("200"), "200")
     val (merged, anomalies, stats) = chain(None, "4")
-    // the fixture's groups are too small to flag an offer: the anomaly
-    // stage's output is empty at both widths, and only its schema is compared
-    assert(merged200.size == 1 + 4 && stats200.nonEmpty)
+    assert(merged200.size == 1 + 4 && anomalies200.size == 1 + 1 && stats200.nonEmpty)
     assert(merged == merged200)
     assert(anomalies == anomalies200)
     assert(stats == stats200)
