@@ -865,6 +865,9 @@ object Dedup {
     *    1.75 s vs 3.3 s at t=0.8) — the prefix path's extra exchanges
     *    dominate before the pair stream grows. Exponent 1.46, so it
     *    loses its lead within one decade (50k docs: 53.8 s vs 28.8 s).
+    *    These figures were measured before the prefix path's length and
+    *    positional filters ([[prefixCandidates]]); BENCH_NOTES "Prefix
+    *    jaccard filters" re-measures the 5k point with them.
     *  - prefix ([[prefixJaccardPairs]]) is the only viable plan at scale
     *    for t ≥ ~0.2: candidate volume scales with (1−t)·|grams|.
     *  - below t ≈ 0.2 the prefix is ~the whole gram set and the filter's
@@ -922,15 +925,63 @@ object Dedup {
     * filter strictly lossless.
     *
     * Scale shape: one shuffle to build the df table, one groupBy to order
-    * each document's grams (state bounded by document size), candidate
-    * generation over prefix postings only (posting lists are ≤ maxDf by
-    * construction — the df cap doubles as the bucket cap), then the
-    * standard SHUFFLE_HASH verify on sorted hash sets. Nothing O(corpus)
-    * is broadcast or collected. */
+    * each document's grams (state bounded by document size), then the
+    * candidate step ([[prefixCandidates]]): a self-join of the prefix index
+    * on (block, gram) (posting lists are ≤ maxDf by construction — the df
+    * cap doubles as the bucket cap), the length filter on the raw joined
+    * rows, and one position aggregate on the (id_a, id_b) exchange that
+    * applies the positional filter. Only the pairs whose sizes and prefix
+    * positions still allow j ≥ t reach the standard SHUFFLE_HASH verify
+    * on sorted hash sets. Nothing O(corpus) is broadcast or collected. */
   def prefixJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                          blockCol: String, n: Int, threshold: Double,
                          maxDf: Int = 500): DataFrame = {
     require(threshold > 0 && threshold < 1, "prefix filter needs 0 < t < 1")
+    // The doc table has THREE consumers (prefix index, and each side of
+    // the verify join) with different column prunings, so exchange reuse
+    // does NOT kick in and the whole grams→postings→docs chain would be
+    // computed three times (measured: the dominant cost of this plan).
+    // A checkpoint materializes it once and shares the partitions across
+    // all consumers — the same lineage-cut tool the connected-components
+    // loop uses, with the same mode selection: when the caller configured
+    // a checkpoint dir the cut is RELIABLE (survives executor loss — the
+    // right mode for a long 100 TB run); otherwise localCheckpoint keeps
+    // blocks executor-local, which is faster but loses the job if an
+    // executor dies after materialization. The reliable cut must be
+    // EAGER: a lazy reliable checkpoint evaluates the un-persisted
+    // lineage once for the first action and again for the checkpoint
+    // write (measured 2× partition evals, commit 0997130) — the exact
+    // recompute this cut exists to avoid. localCheckpoint is
+    // persist-based, so lazy is fine there.
+    // Storage is O(corpus/cluster-width) per executor, freed by the
+    // context cleaner when the query's RDD goes out of scope.
+    val reliable = df.sparkSession.sparkContext.getCheckpointDir.isDefined
+    val docs0 = prefixDocs(df, textCol, idCol, blockCol, n, threshold, maxDf)
+    val docs = if (reliable) docs0.checkpoint(true) else docs0.localCheckpoint(false)
+    // verify on the capped value-sorted hash sets (same SHUFFLE_HASH
+    // rationale as verifyJaccard: the set table is O(corpus)); the
+    // full set sizes ride along with the candidates
+    val vsets = docs
+      .select(col("id"), sort_array(col("by_rarity.gram")).as("toks"))
+      .hint("shuffle_hash")
+    prefixCandidates(docs, threshold)
+      .join(vsets.select(col("id").as("id_a"), col("toks").as("toks_a")), "id_a")
+      .join(vsets.select(col("id").as("id_b"), col("toks").as("toks_b")), "id_b")
+      .withColumn("inter", graft.functions.NativeTextColumns
+        .sortedIntersectSize(col("toks_a"), col("toks_b")).cast("long"))
+      .withColumn("jaccard",
+        round(col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")), 4))
+      .where(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
+  }
+
+  /** [[prefixJaccardPairs]]' doc table, one row per (id, block): `by_rarity`
+    * (the df-capped grams as (gdf, gram), sorted — one total order shared
+    * by every document of a block), `sz` (the FULL distinct-gram count),
+    * `cap` = size(by_rarity), and the prefix length `plen`. */
+  private[graft] def prefixDocs(df: DataFrame, textCol: String, idCol: String,
+                                blockCol: String, n: Int, threshold: Double,
+                                maxDf: Int): DataFrame = {
     val sets = df.select(col(idCol).as("id"), col(blockCol).as("blk"),
       gramHashSet(col(textCol), n).as("gr"))
     // carry the FULL distinct-gram count through the explode: the union
@@ -960,63 +1011,70 @@ object Dedup {
         col("d.sz").as("sz"))
     // t' = t − 1e−4 (< the 4-decimal acceptance floor t − 5e−5), minus an
     // fp epsilon inside ceil: both errors can only LENGTHEN the prefix.
-    // The doc table has THREE consumers (prefix index, and each side of
-    // the verify join) with different column prunings, so exchange reuse
-    // does NOT kick in and the whole grams→postings→docs chain would be
-    // computed three times (measured: the dominant cost of this plan).
-    // A checkpoint materializes it once and shares the partitions across
-    // all consumers — the same lineage-cut tool the connected-components
-    // loop uses, with the same mode selection: when the caller configured
-    // a checkpoint dir the cut is RELIABLE (survives executor loss — the
-    // right mode for a long 100 TB run); otherwise localCheckpoint keeps
-    // blocks executor-local, which is faster but loses the job if an
-    // executor dies after materialization. The reliable cut must be
-    // EAGER: a lazy reliable checkpoint evaluates the un-persisted
-    // lineage once for the first action and again for the checkpoint
-    // write (measured 2× partition evals, commit 0997130) — the exact
-    // recompute this cut exists to avoid. localCheckpoint is
-    // persist-based, so lazy is fine there.
-    // Storage is O(corpus/cluster-width) per executor, freed by the
-    // context cleaner when the query's RDD goes out of scope.
-    val reliable = df.sparkSession.sparkContext.getCheckpointDir.isDefined
-    val docs0 = capped.groupBy("id", "blk")
+    capped.groupBy("id", "blk")
       .agg(sort_array(collect_list(struct(col("gdf"), col("gram")))).as("by_rarity"),
         first(col("sz")).as("sz"))
+      .withColumn("cap", size(col("by_rarity")))
       .withColumn("alpha",
         ceil(lit(threshold - 1e-4) * col("sz") - lit(1e-9)).cast("int"))
-      .withColumn("plen", size(col("by_rarity")) - col("alpha") + lit(1))
-    val docs = if (reliable) docs0.checkpoint(true) else docs0.localCheckpoint(false)
+      .withColumn("plen", col("cap") - col("alpha") + lit(1))
+  }
+
+  /** The candidate pairs (id_a < id_b, with sz_a, sz_b) of
+    * [[prefixJaccardPairs]]: every pair sharing a prefix gram whose sizes
+    * and prefix positions still allow j ≥ t. With inter ≤ ub, j =
+    * inter/(sz_a+sz_b−inter) ≤ ub/(sz_a+sz_b−ub), so a pair whose bound
+    * ub misses t' cannot pass verify. Two bounds, both exact:
+    *  - length (All-Pairs): ub = min(cap_a, cap_b), on the raw joined
+    *    rows, so it also cuts the exchange volume;
+    *  - positional (PPJoin): the rows of a pair are aggregated to the
+    *    first (fa, fb) and last (la, lb) shared prefix positions (0-based)
+    *    and their count cnt; ub = min(cap_a−fa, cap_b−fb,
+    *    cnt + min(cap_a−la−1, cap_b−lb−1)). Both sides share one gram
+    *    order, so the first shared prefix gram is the first shared gram
+    *    overall, min/max positions on the two sides come from the same
+    *    gram, and every shared gram before the last shared prefix gram
+    *    lies inside both prefixes — `cnt` counts all of them.
+    * The same slack as the prefix length (t' = t − 1e−4, fp guard 1e−9)
+    * can only loosen a bound, so the filters drop no output pair. */
+  private[graft] def prefixCandidates(docs: DataFrame, threshold: Double): DataFrame = {
+    def reaches(ub: Column): Column =
+      ub >= lit(threshold - 1e-4) * (col("sz_a") + col("sz_b") - ub) - lit(1e-9)
+    // the self-join amplifies each posting up to maxDf²/2×, so the index
+    // is spread over the full cluster width EXPLICITLY (as in
+    // pairsFromGroups: AQE's byte-based coalescing would judge the tiny
+    // index rows by size and serialize the quadratic join onto a few
+    // tasks); both sides reuse this one exchange. SHUFFLE_HASH, never
+    // broadcast: the index is O(corpus).
     // by_rarity.gram = GetArrayStructFields (native, codegen'd) — the
     // transform(_, s => s.getField(...)) spelling is a higher-order
     // function (CodegenFallback) and dragged this Project out of codegen
     val index = docs.where(col("plen") > 0)
-      .select(col("id"), col("blk"),
-        explode(slice(col("by_rarity.gram"), lit(1), col("plen"))).as("gram"))
-    // NOT distinctPairsByIdA: the prefix index generates a pair once per
-    // SHARED PREFIX GRAM, so raw multiplicity here is high (a near-dup
-    // pair shares most of its prefix) and a dedup-free id_a exchange
-    // would carry the whole multiplied stream — the (id_a,id_b) distinct
-    // exchange pays for itself (r18 order-controlled sf1 A/B: fusing
-    // cost d4b +4..10% while winning x14 −17%; the fusion only wins
-    // where multiplicity is the band count, not the prefix length)
-    val cands = pairsFromGroups(index, Seq("blk", "gram"), "id", maxDf).distinct()
-    // verify on the capped value-sorted hash sets (same SHUFFLE_HASH
-    // rationale as verifyJaccard: the set table is O(corpus))
-    val vsets = docs
-      .select(col("id"),
-        sort_array(col("by_rarity.gram")).as("toks"),
-        col("sz"))
-      .hint("shuffle_hash")
-    cands
-      .join(vsets.select(col("id").as("id_a"), col("toks").as("toks_a"),
-        col("sz").as("sz_a")), "id_a")
-      .join(vsets.select(col("id").as("id_b"), col("toks").as("toks_b"),
-        col("sz").as("sz_b")), "id_b")
-      .withColumn("inter", graft.functions.NativeTextColumns
-        .sortedIntersectSize(col("toks_a"), col("toks_b")).cast("long"))
-      .withColumn("jaccard",
-        round(col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")), 4))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+      .select(col("id"), col("blk"), col("sz"), col("cap"),
+        posexplode(slice(col("by_rarity.gram"), lit(1), col("plen"))).as(Seq("pos", "gram")))
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("blk"), col("gram"))
+    def side(s: String): DataFrame = index.select(col("blk"), col("gram"),
+      col("id").as(s"id_$s"), col("sz").as(s"sz_$s"), col("cap").as(s"cap_$s"),
+      col("pos").as(s"p$s"))
+    // a pair is generated once per SHARED PREFIX GRAM (a near-dup pair
+    // shares most of its prefix), so the raw rows are filtered before the
+    // (id_a, id_b) exchange and deduped by the position aggregate on it.
+    // NOT distinctPairsByIdA's id_a-only exchange: it would carry the
+    // multiplied stream (r18 order-controlled sf1 A/B: d4b +4..10%)
+    side("a").join(side("b").hint("shuffle_hash"), Seq("blk", "gram"))
+      .where(col("id_a") < col("id_b") && reaches(least(col("cap_a"), col("cap_b"))))
+      .groupBy("id_a", "id_b", "sz_a", "sz_b", "cap_a", "cap_b")
+      .agg(min(col("pa")).as("fa"), min(col("pb")).as("fb"),
+        max(col("pa")).as("la"), max(col("pb")).as("lb"), count(lit(1)).as("cnt"))
+      .where(reaches(least(col("cap_a") - col("fa"), col("cap_b") - col("fb"),
+        col("cnt") + least(col("cap_a") - col("la"), col("cap_b") - col("lb")) - lit(1))))
+      // id_a < id_b already dropped null ids; declaring it keeps the pair
+      // schema that pairsFromGroups emits (non-null ids), so the written
+      // pairs are byte-identical whichever jaccard plan ran
+      .select(knownNotNull(col("id_a")).as("id_a"), knownNotNull(col("id_b")).as("id_b"),
+        col("sz_a"), col("sz_b"))
   }
+
+  private def knownNotNull(c: Column): Column = org.apache.spark.sql.GraftBridge.column(
+    org.apache.spark.sql.catalyst.expressions.KnownNotNull(org.apache.spark.sql.GraftBridge.expression(c)))
 }

@@ -61,6 +61,18 @@ class DedupSimilaritySpec extends SparkSuite {
       val prefixed = Dedup.prefixJaccardPairs(corpus, "text", "doc_id", "lang", 2, t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(prefixed == counting, s"prefix filter lost/invented pairs at t=$t")
+      if (t == 0.8) {
+        // the candidate step keeps every output pair and prunes: a change
+        // that silently drops the filters fails here, not only in a benchmark
+        val docs = Dedup.prefixDocs(corpus, "text", "doc_id", "lang", 2, t, maxDf = 500)
+        val cands = candidatePairs(docs, t)
+        val unfiltered = unfilteredPrefixPairs(docs)
+        val out = prefixed.map(p => (p._1, p._2))
+        assert(out.nonEmpty && out.subsetOf(cands), s"candidates lost output pairs ${out -- cands}")
+        assert(cands.subsetOf(unfiltered))
+        assert(cands.size < unfiltered.size,
+          s"filters pruned nothing: ${cands.size} of ${unfiltered.size} prefix pairs kept")
+      }
     }
   }
 
@@ -84,6 +96,82 @@ class DedupSimilaritySpec extends SparkSuite {
       assert(counting == Set((0L, 1L, 0.8)),
         s"expected exactly the planted pair at t=$t, got $counting")
     }
+  }
+
+  /** Two documents over one shared token run: `shared` shared bigrams,
+    * plus `pa` and `pb` private ones (the junction bigram included), so
+    * j = shared / (shared + pa + pb). Private grams (df 1) sort first in
+    * the prefix order, so the first shared gram sits at position pa / pb
+    * and the first-position bound equals the true intersection. */
+  private def runPair(tag: String, shared: Int, pa: Int, pb: Int): Seq[String] = {
+    val run = (0 to shared).map(i => s"${tag}s$i")
+    Seq(run ++ (0 until pa).map(i => s"${tag}a$i"), run ++ (0 until pb).map(i => s"${tag}b$i"))
+      .map(_.mkString(" "))
+  }
+
+  test("prefix jaccard filters: pairs at j = t ± 1e-4 and the pairs each filter " +
+      "rejects give exactly the counting plan's set") {
+    val t = 0.8
+    val boundary = Seq(
+      runPair("q", 7999, 1000, 1001),   // j = 0.7999: rounds below t
+      runPair("r", 19998, 2501, 2501),  // j = 0.79992: rounds below t
+      runPair("u", 19999, 2500, 2501),  // j = 0.79996 < t, rounds to t
+      runPair("v", 20000, 2500, 2500),  // j = t exactly
+      runPair("w", 8001, 999, 1000))    // j = 0.8001
+    // the length filter's pair: all 10 grams of the small doc are in the
+    // big one, whose 10 extra grams the two helpers lift to df 3, so both
+    // prefixes start with shared grams; |A|/|B| = 0.5 < t
+    val small = (0 to 10).map(i => s"lc$i").mkString(" ")
+    val extra = ("lc10" +: (0 until 10).map(i => s"le$i")).mkString(" ")
+    val lengthPair = Seq(small, s"$small ${extra.stripPrefix("lc10 ")}", extra, extra)
+    // the positional filter's pair: equal sizes (10 grams), 8 shared, the
+    // first shared gram at position 2 on both sides — in both prefixes
+    // (plen 3), but at most 8 of 10 grams can still match: 8/12 < t
+    val positionalPair = runPair("p", 8, 2, 2)
+    val texts = boundary.flatten ++ lengthPair ++ positionalPair
+    val corpus = texts.zipWithIndex.map { case (s, i) => (i.toLong, s) }
+      .toDF("doc_id", "text").withColumn("blk", lit("all"))
+    def triples(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val counting = triples(Dedup.ngramJaccardPairs(corpus, "text", "doc_id", "blk", 2, t))
+    val prefixed = triples(Dedup.prefixJaccardPairs(corpus, "text", "doc_id", "blk", 2, t))
+    assert(prefixed == counting, s"filtered prefix plan diverged: $prefixed vs $counting")
+    // the boundary pairs (ids 0..9) that round to ≥ t, and the helpers' twin pair
+    assert(counting == Set((4L, 5L, 0.8), (6L, 7L, 0.8), (8L, 9L, 0.8001), (12L, 13L, 1.0)),
+      s"unexpected counting set $counting")
+
+    // each planted pair shares a prefix gram, and the filter meant for it
+    // is the one that drops it
+    val docs = Dedup.prefixDocs(corpus, "text", "doc_id", "blk", 2, t, maxDf = 500)
+    val cands = candidatePairs(docs, t)
+    val unfiltered = unfilteredPrefixPairs(docs)
+    val sizes = docs.select("id", "sz", "cap").collect()
+      .map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2))).toMap
+    def lengthKeeps(a: Long, b: Long): Boolean = {
+      val m = math.min(sizes(a)._2, sizes(b)._2)
+      m.toDouble / (sizes(a)._1 + sizes(b)._1 - m) >= t - 1e-4
+    }
+    for (p <- Seq((10L, 11L), (14L, 15L))) assert(unfiltered.contains(p), s"$p shares no prefix gram")
+    assert(!lengthKeeps(10L, 11L) && !cands.contains((10L, 11L)), "length filter kept (10, 11)")
+    assert(lengthKeeps(14L, 15L) && !cands.contains((14L, 15L)), "positional filter kept (14, 15)")
+    // the first-position bound of the boundary pairs that round to ≥ t is
+    // exact, so only the slack keeps (4, 5) (j = 0.79996 < t)
+    for (p <- Seq((4L, 5L), (6L, 7L), (8L, 9L)))
+      assert(cands.contains(p), s"boundary pair $p filtered out")
+  }
+
+  private def candidatePairs(docs: org.apache.spark.sql.DataFrame, t: Double): Set[(Long, Long)] =
+    Dedup.prefixCandidates(docs, t).select("id_a", "id_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** Every pair sharing a prefix gram, with no length or positional filter. */
+  private def unfilteredPrefixPairs(docs: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
+    val index = docs.where(col("plen") > 0).select(col("id"), col("blk"),
+      explode(slice(col("by_rarity.gram"), lit(1), col("plen"))).as("gram"))
+    index.select(col("id").as("id_a"), col("blk"), col("gram"))
+      .join(index.select(col("id").as("id_b"), col("blk"), col("gram")), Seq("blk", "gram"))
+      .where(col("id_a") < col("id_b")).select("id_a", "id_b").distinct()
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   }
 
   test("jaccardPairs auto-crossover: switch point pinned; both arms lossless") {

@@ -156,17 +156,20 @@ class PropertiesSpec extends SparkSuite {
     val vocab = Vector("a", "b", "c", "d", "e", "f")
     val docGen = Gen.chooseNum(1, 12).flatMap(n =>
       Gen.listOfN(n, Gen.oneOf(vocab)).map(_.mkString(" ")))
-    val corpus = Gen.listOfN(60, docGen).sample.get
-      .zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    val texts = Gen.listOfN(60, docGen).sample.get
+    val corpus = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text").withColumn("blk", lit("all"))
-    for (t <- Seq(0.15, 0.5, 0.85)) {
+    // 0.79998 / 0.80002 (and 0.49998 / 0.50002) straddle a 4-decimal
+    // boundary: j = 4/5 (1/2) is kept at the first and dropped at the second
+    for (t <- Seq(0.15, 0.5, 0.85, 0.49998, 0.50002, 0.79998, 0.80002)) {
       val counting = graft.operators.Dedup
         .ngramJaccardPairs(corpus, "text", "doc_id", "blk", 2, t, maxDf = 20)
         .collect().map(_.toSeq).toSet
       val prefixed = graft.operators.Dedup
         .prefixJaccardPairs(corpus, "text", "doc_id", "blk", 2, t, maxDf = 20)
         .collect().map(_.toSeq).toSet
-      assert(prefixed == counting, s"prefix filter diverged at t=$t")
+      assert(prefixed == counting, s"prefix filter diverged at t=$t on corpus " +
+        texts.mkString("Seq(\"", "\", \"", "\")"))
     }
   }
 
