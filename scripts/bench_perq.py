@@ -19,21 +19,7 @@ graft.Bench's {"queries": {...}} shape so scripts/scale_exponents.py
 can eat it directly.
 
 Usage: bench_perq.py <sfDir> <out.json> [--repeats N] [--mem 60g]
-           [--pair-cache DIR] [--stats-cache DIR] [--skip name=reason]... q1 q2 ...
-
---pair-cache sets SPARK_GRAFT_PAIR_CACHE for every per-query JVM: the
-d2-family queries then share the on-disk pair-graph artifact ACROSS the
-fresh processes (its cross-process design point). The first process to
-need the pairs builds and persists them; later ones read. Timings in this
-mode measure artifact-consumption, not per-query computation — the mode
-field says so, and such runs must not be compared against no-cache runs
-query-by-query.
-
---stats-cache sets SPARK_GRAFT_STATS_CACHE likewise: the anomaly-family
-queries (a6/t4/z3/z5/z6) share the on-disk group-stats artifact across
-fresh processes — the z-family's cross-process design point (the
-reference's two committed anomaly runs over one stats table). Same
-caveat: consumption-mode timings, not per-query computation.
+           [--skip name=reason]... q1 q2 ...
 
 --skip records the query as deliberately not run, with the reason in the
 output JSON's "skipped" map — distinct from a FAILURE. Use it for catalog
@@ -57,12 +43,6 @@ def main():
         i = args.index("--repeats"); repeats = args[i + 1]; del args[i:i + 2]
     if "--mem" in args:
         i = args.index("--mem"); mem = args[i + 1]; del args[i:i + 2]
-    pair_cache = None
-    if "--pair-cache" in args:
-        i = args.index("--pair-cache"); pair_cache = args[i + 1]; del args[i:i + 2]
-    stats_cache = None
-    if "--stats-cache" in args:
-        i = args.index("--stats-cache"); stats_cache = args[i + 1]; del args[i:i + 2]
     while "--skip" in args:
         i = args.index("--skip")
         name, _, reason = args[i + 1].partition("=")
@@ -78,9 +58,7 @@ def main():
         p = subprocess.run(
             ["scripts/run_main.sh", "graft.BenchOne", q, repeats],
             env={**__import__("os").environ,
-                 "SPARK_GRAFT_SF_DIR": sf_dir, "SPARK_DRIVER_MEM": mem,
-                 **({"SPARK_GRAFT_PAIR_CACHE": pair_cache} if pair_cache else {}),
-                 **({"SPARK_GRAFT_STATS_CACHE": stats_cache} if stats_cache else {})},
+                 "SPARK_GRAFT_SF_DIR": sf_dir, "SPARK_DRIVER_MEM": mem},
             capture_output=True, text=True)
         times = [float(m) for m in re.findall(
             rf"\[bench-one\] {re.escape(q)} run\d+ ([0-9.]+) s", p.stdout)]
@@ -99,13 +77,7 @@ def main():
            "queries": results, "n_failed": len(failed), "failed": failed,
            "skipped": skipped,
            "sf": sf_dir,
-           "pair_cache": pair_cache or "none",
-           "stats_cache": stats_cache or "none",
-           "mode": f"per-query fresh JVM, min of {repeats}" +
-                   (", shared disk pair-graph artifact (times are "
-                    "consumption, not computation)" if pair_cache else "") +
-                   (", shared disk group-stats artifact (times are "
-                    "consumption, not computation)" if stats_cache else "")}
+           "mode": f"per-query fresh JVM, min of {repeats}"}
     with open(out_path, "w") as f:
         json.dump(doc, f, indent=1)
     print(f"[perq] total {total:.1f} s over {len(results)} queries -> {out_path}",

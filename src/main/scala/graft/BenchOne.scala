@@ -11,15 +11,9 @@ object BenchOne {
     val repeats = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Bench.session()
-    // pair-graph posture (see Bench): the warmup count() below populates
-    // the in-process artifact, so timed runs would measure CONSUMPTION of
-    // the warmup's checkpoint, not the query's computation. Cleared
-    // before every timed run. With a disk cache (SPARK_GRAFT_PAIR_CACHE)
-    // timed runs measure artifact-read + consumer work — the
-    // cross-process pipeline number, labeled as such.
-    val pairMode = sys.env.get("SPARK_GRAFT_PAIR_CACHE")
-      .map(d => s"disk:$d").getOrElse("per_run_cleared")
-    System.err.println(s"[bench-one] pair_graph_cache=$pairMode")
+    // the warmup count() below populates the in-process artifacts, so
+    // timed runs would measure CONSUMPTION of the warmup's checkpoint,
+    // not the query's computation: cleared before every timed run.
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       val rows = fn(spark, sfDir).count()

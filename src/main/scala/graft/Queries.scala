@@ -96,8 +96,7 @@ object Queries {
   /** The d2 pair-graph ARTIFACT for the non-blank documents corpus: the
     * whole composed family (d2 detection, d8 clustering, d10 manifest,
     * x17 splits, x22b pretrain program) consumes these pairs, so they
-    * are computed once per process — and once per corpus snapshot when a
-    * disk cache is configured — through [[graft.operators.PairGraph]].
+    * are computed once per session through [[graft.operators.PairGraph]].
     * Five catalog queries used to re-run the identical ~300 s candidate+
     * verify pipeline at sf10; an artifact is how a real pipeline shares
     * that stage. */
@@ -2526,10 +2525,9 @@ object Queries {
 
   /** The semantic pair-graph ARTIFACT the d11c/d12 rows share (the
     * d2PairGraph pattern applied to embeddings): one quantizer-assign +
-    * pair pass per (process, corpus, centroids, params) — and, under
-    * `SPARK_GRAFT_PAIR_CACHE`, per corpus snapshot across processes —
-    * so detection and the pruning manifest can never disagree on the
-    * pair set, and neither recomputes the family's expensive stage. */
+    * pair pass per (session, corpus, centroids, params), so detection
+    * and the pruning manifest can never disagree on the pair set, and
+    * neither recomputes the family's expensive stage. */
   private def dSemanticPairGraph(s: SparkSession, dir: String): DataFrame =
     graft.operators.SemanticPairGraph.pairs(
       t(s, dir, "embeddings").where(col("vec_id") < 1000), "vec_id", "embedding",

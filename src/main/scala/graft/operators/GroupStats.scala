@@ -19,9 +19,9 @@ import org.apache.spark.sql.DataFrame
   * quartiles in one pass — lazily local-checkpointed: O(groups) rows,
   * materialized on the first consumer's job, lineage truncated so the
   * upstream scan/shuffle can be reaped while the compact table lives on.
-  * On a cluster this would be a table in the lakehouse keyed by corpus
-  * snapshot (like PairGraph's disk layer); in-process memoization covers
-  * the engine's per-application reuse.
+  * On a cluster this would be a lakehouse table keyed by corpus snapshot
+  * id; in-process memoization ([[FrameMemo]]) covers the engine's
+  * per-application reuse.
   *
   * Cache identity: `corpusKey` is the CALLER's name for the logical
   * corpus (data dir + table + any filter applied upstream); keys and
@@ -44,48 +44,24 @@ object GroupStats {
   private def momentsKey(corpusKey: String, keys: Seq[String], priceCol: String) =
     s"moments|$corpusKey|keys=${keys.mkString(",")}|p=$priceCol"
 
-  /** The ONE place the full table's key is spelled: table() persists
-    * under this key and moments() looks it up — a format drift between
-    * the two sites would silently kill the cross-process projection
-    * (moments would recompute the corpus instead of erroring). */
+  /** The ONE place the full table's key is spelled: table() stores
+    * under this key and moments() peeks it — a format drift between the
+    * two sites would silently turn moments' free projection into a
+    * second corpus pass. */
   private def fullKey(corpusKey: String, keys: Seq[String], priceCol: String) =
     s"stats|$corpusKey|keys=${keys.mkString(",")}|p=$priceCol"
 
   /** The fused per-group stats table (see [[Anomaly.fullStats]] for the
-    * columns), computed once per (session, corpus, keys, price). With
-    * `SPARK_GRAFT_STATS_CACHE=<dir>` (or an explicit cacheDir) the table
-    * is ALSO persisted to / read from
-    * `<dir>/<md5(key)>/stats.parquet` — the cross-process design point:
-    * the reference's two committed anomaly runs (18:42 z-score, 20:19
-    * IQR) were SEPARATE processes consuming one stats table, and a
-    * production pipeline materializes this per corpus snapshot the same
-    * way the pair graph is. Same manifest + row-count staleness contract
-    * as PairGraph ([[FrameDiskCache]]). */
+    * columns), computed once per (session, corpus, keys, price).
+    * Exact quartiles only: they are the reference artifacts' contract
+    * (GoldenReplaySpec). The bounded-state approx tier for mega-groups
+    * is its own catalog query ([[Anomaly.fullStatsApprox]], z6b), never
+    * a silent substitute here. */
   def table(df: DataFrame, keys: Seq[String], priceCol: String,
-            corpusKey: String,
-            cacheDir: Option[String] = sys.env.get("SPARK_GRAFT_STATS_CACHE"))
-  : DataFrame = {
-    val sess = df.sparkSession
-    // Exact quartiles only: they are the reference artifacts' contract
-    // (GoldenReplaySpec). The bounded-state approx tier for mega-groups
-    // is its own catalog query ([[Anomaly.fullStatsApprox]], z6b), never
-    // a silent substitute here.
-    val key = fullKey(corpusKey, keys, priceCol)
-    memo.getOrCompute(sess, key) {
-      cacheDir match {
-        case Some(root) =>
-          // one column-pruned scan for the staleness check (the cheapest
-          // column — the first grouping key)
-          val nRows = df.select(keys.head).count()
-          FrameDiskCache.loadOrCompute(sess, root,
-            key, nRows, "stats.parquet") {
-            Anomaly.fullStats(df, keys, priceCol)
-          }
-        case None =>
-          Anomaly.fullStats(df, keys, priceCol).localCheckpoint(false)
-      }
+            corpusKey: String): DataFrame =
+    memo.getOrCompute(df.sparkSession, fullKey(corpusKey, keys, priceCol)) {
+      Anomaly.fullStats(df, keys, priceCol).localCheckpoint(false)
     }
-  }
 
   /** The MOMENTS tier (n/Σp/Σp² only — what the z-score rule, the summary
     * and top-K deviation consume): served as a free projection of the
@@ -96,32 +72,15 @@ object GroupStats {
     * quantile buffers it doesn't read, while a family run shares one
     * corpus pass end to end. */
   def moments(df: DataFrame, keys: Seq[String], priceCol: String,
-              corpusKey: String,
-              cacheDir: Option[String] = sys.env.get("SPARK_GRAFT_STATS_CACHE"))
-  : DataFrame = {
+              corpusKey: String): DataFrame = {
     val sess = df.sparkSession
     memo.getOrCompute(sess, momentsKey(corpusKey, keys, priceCol)) {
-      val key = fullKey(corpusKey, keys, priceCol)
-      def project(full: DataFrame): DataFrame =
-        full.select((keys ++ Seq("n_offers", "s1x", "s2x")).map(
-          org.apache.spark.sql.functions.col): _*)
-      memo.peek(sess, key) match {
-        case Some(full) => project(full)
+      memo.peek(sess, fullKey(corpusKey, keys, priceCol)) match {
+        case Some(full) =>
+          full.select((keys ++ Seq("n_offers", "s1x", "s2x")).map(
+            org.apache.spark.sql.functions.col): _*)
         case None =>
-          // cross-process: a full-tier artifact persisted by an EARLIER
-          // process serves the moments as an O(groups) projection — the
-          // reference's separate z-score run consuming the stats table
-          // the first run built. Price on a hit: the one-column
-          // staleness count (same as table()'s) instead of the corpus
-          // aggregation; on a miss with cacheDir set, the count is the
-          // overhead, and the moments-only aggregation is NOT persisted
-          // (the FULL table is the family's one disk artifact).
-          val fromDisk = cacheDir.flatMap { root =>
-            val nRows = df.select(keys.head).count()
-            FrameDiskCache.load(sess, root, key, nRows, "stats.parquet")
-          }
-          fromDisk.map(project).getOrElse(
-            Anomaly.momentStats(df, keys, priceCol).localCheckpoint(false))
+          Anomaly.momentStats(df, keys, priceCol).localCheckpoint(false)
       }
     }
   }

@@ -10,41 +10,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the same corpus — by far the most expensive stage of the family
   * (measured at sf10: five catalog queries ≥288 s each, ~300 s of which
   * is this shared prefix; BENCH_NOTES r9). At 100 TB the pair graph is a
-  * pipeline ARTIFACT — computed once per corpus snapshot, persisted,
-  * then consumed by every downstream step — not a per-query
-  * recomputation. This object is that artifact's API:
-  *
-  *   - in-process: per (session, corpusKey, params, columns) the
-  *     verified pair DataFrame is computed once and local-checkpointed;
-  *     every later consumer in the same application reuses the
-  *     materialized blocks (lineage is truncated on first
-  *     materialization, so the upstream banding/verify shuffles can be
-  *     reaped while the compact pair set lives on).
-  *   - across processes (optional): set `SPARK_GRAFT_PAIR_CACHE=<dir>`
-  *     (or pass `cacheDir`) and the pairs are also written to / read
-  *     from `<dir>/<md5(corpusKey|cols|params)>/pairs.parquet` with a
-  *     JSON manifest. On a cluster this would be a table in the
-  *     lakehouse keyed by corpus snapshot id; here it is a directory.
+  * pipeline ARTIFACT — computed once per corpus snapshot, then consumed
+  * by every downstream step — not a per-query recomputation; on a
+  * cluster it would be a lakehouse table keyed by corpus snapshot id.
+  * This object is the artifact's in-process layer: per
+  * (session, corpusKey, params, columns) the verified pair DataFrame is
+  * computed once and local-checkpointed, and every later consumer in the
+  * same application reuses the materialized blocks (lineage is truncated
+  * on first materialization, so the upstream banding/verify shuffles can
+  * be reaped while the compact pair set lives on).
   *
   * Cache identity: `corpusKey` is the CALLER's name for the logical
   * corpus (data dir + any filter/gate applied — e.g. the quality-kept
   * subset must use a different key than the raw table). The text/id
   * column names are part of the key automatically — two callers reading
   * DIFFERENT columns of the same table under the same corpusKey get
-  * separate artifacts, not silently shared pairs. The disk manifest
-  * additionally records the corpus row count and re-validates it on
-  * load — a cheap one-column scan that catches the common staleness case
-  * (data regenerated in place at a different size) without paying a
-  * content hash of 100 TB of text. The same scan also attests an
-  * order-insensitive id-set digest
-  * ([[FrameDiskCache.countAndDigest]]), catching constant-row-count
-  * edits that churn the id set. A corpus edited at constant row count
-  * under UNCHANGED ids and an unchanged corpusKey remains the caller's
-  * contract violation: clear the cache dir when the snapshot changes. The disk cache assumes
-  * a SINGLE WRITER per key (a pipeline materializes each corpus
-  * snapshot's artifact once); concurrent readers are safe — the manifest
-  * is written via temp-file + atomic rename AFTER the parquet commit, so
-  * a reader either sees the complete artifact or no manifest at all.
+  * separate artifacts, not silently shared pairs. A corpus edited in
+  * place under an unchanged corpusKey within one session is the
+  * caller's contract violation.
   *
   * In-process entries are keyed on the SparkSession INSTANCE (reference
   * identity — sessions don't define value equality) and evicted when the
@@ -86,26 +69,16 @@ object PairGraph {
   private[graft] def computeCount: java.util.concurrent.atomic.AtomicInteger =
     memo.computeCount
 
-  /** Near-dup pairs (id_a, id_b, jaccard) of the corpus, through every
-    * cache layer. First call computes (and persists, if a disk cache is
-    * configured); later calls — same process or, with the disk cache, a
-    * later job over the same corpus snapshot — reuse the artifact. */
+  /** Near-dup pairs (id_a, id_b, jaccard) of the corpus. First call in a
+    * session computes; later calls with the same key reuse the artifact. */
   def pairs(df: DataFrame, textCol: String, idCol: String,
-            corpusKey: String, p: Params,
-            cacheDir: Option[String] = sys.env.get("SPARK_GRAFT_PAIR_CACHE"))
-  : DataFrame = {
-    val sess = df.sparkSession
-    memo.getOrCompute(sess, p.cacheKey(corpusKey, textCol, idCol)) {
-      cacheDir match {
-        case Some(root) => diskPairs(sess, df, textCol, idCol, corpusKey, p, root)
-        case None =>
-          Dedup.neardupPairs(df, textCol, idCol, p.bands, p.rowsPerBand,
-              p.threshold, p.shingleN, p.maxBucket, p.adaptiveMinDocs,
-              prefilterK = p.prefilterK)
-            .localCheckpoint(false)
-      }
+            corpusKey: String, p: Params): DataFrame =
+    memo.getOrCompute(df.sparkSession, p.cacheKey(corpusKey, textCol, idCol)) {
+      Dedup.neardupPairs(df, textCol, idCol, p.bands, p.rowsPerBand,
+          p.threshold, p.shingleN, p.maxBucket, p.adaptiveMinDocs,
+          prefilterK = p.prefilterK)
+        .localCheckpoint(false)
     }
-  }
 
   /** Drop every in-process entry (test isolation; bench harnesses that
     * must time computation, not reuse). */
@@ -116,20 +89,4 @@ object PairGraph {
     * context. */
   private[graft] def evictSession(sess: SparkSession): Unit =
     memo.evictSession(sess)
-
-  private def diskPairs(sess: SparkSession, df: DataFrame, textCol: String,
-                        idCol: String, corpusKey: String, p: Params,
-                        root: String): DataFrame = {
-    // one column-pruned scan of the corpus: feeds the staleness check
-    // (count + id-set digest, same aggregate), and neardupPairs'
-    // plan choice (which would otherwise count again)
-    val (nDocs, digest) = FrameDiskCache.countAndDigest(df, idCol)
-    FrameDiskCache.loadOrCompute(sess, root,
-      p.cacheKey(corpusKey, textCol, idCol), nDocs, "pairs.parquet",
-      Some(digest)) {
-      Dedup.neardupPairs(df, textCol, idCol, p.bands,
-        p.rowsPerBand, p.threshold, p.shingleN, p.maxBucket,
-        p.adaptiveMinDocs, numDocs = Some(nDocs), prefilterK = p.prefilterK)
-    }
-  }
 }

@@ -9,23 +9,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * downstream consumer (eval splits, curation stages) start from the
   * same quantizer-assign + in-cell pair pass over the same corpus — the
   * family's expensive stage. At 100 TB the pair set is a pipeline
-  * artifact computed once per (corpus snapshot, centroid table,
-  * params), persisted, then consumed — not a per-query recomputation.
-  * Layers are identical to PairGraph's (shared [[FrameMemo]] /
-  * [[FrameDiskCache]] machinery): in-process exactly-once +
-  * localCheckpoint; cross-process parquet + manifest under
-  * `SPARK_GRAFT_PAIR_CACHE` (one artifact root for both families —
-  * keys are disjoint by content, and a pipeline's "pair artifacts"
-  * belong together).
+  * artifact computed once per (corpus snapshot, centroid table, params),
+  * then consumed — not a per-query recomputation; on a cluster it would
+  * be a lakehouse table keyed by corpus snapshot id. The in-process layer
+  * is PairGraph's ([[FrameMemo]]): exactly-once + localCheckpoint per
+  * session.
   *
   * Cache identity: corpusKey (the caller's name for the logical corpus,
   * filters included) + id/vec column names + every routing parameter +
   * an md5 of the CENTROID TABLE VALUES — two quantizers over the same
   * corpus are different artifacts (trained centroids differ run to run
   * only if the corpus did, see IvfIndex.train's decimal determinism,
-  * but md5-table vs trained must never alias). Same staleness contract
-  * as PairGraph: manifest records the corpus row count and the id-set
-  * digest (see [[FrameDiskCache.countAndDigest]]), re-validated on load.
+  * but md5-table vs trained must never alias).
   *
   * Results are identical to calling
   * [[Similarity.semanticNearDupPairsAuto]] directly — the artifact
@@ -65,32 +60,18 @@ object SemanticPairGraph {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** Semantic near-dup pairs (id_a, id_b, cos, centroid) of the corpus,
-    * through every cache layer — first call computes (and persists if a
-    * disk root is configured), later calls consume. */
+  /** Semantic near-dup pairs (id_a, id_b, cos, centroid) of the corpus —
+    * first call in a session computes, later calls consume. */
   def pairs(df: DataFrame, idCol: String, vecCol: String,
             centroids: Array[(Int, Array[Double])],
-            corpusKey: String, p: Params,
-            cacheDir: Option[String] = sys.env.get("SPARK_GRAFT_PAIR_CACHE"))
-  : DataFrame = {
-    val sess = df.sparkSession
-    val key = p.cacheKey(corpusKey, idCol, vecCol, centroidsDigest(centroids))
-    def compute(): DataFrame =
+            corpusKey: String, p: Params): DataFrame =
+    memo.getOrCompute(df.sparkSession,
+        p.cacheKey(corpusKey, idCol, vecCol, centroidsDigest(centroids))) {
       Similarity.semanticNearDupPairsAuto(df, idCol, vecCol, centroids,
-        p.threshold, p.targetCell, p.maxExtraBits, p.cellPairBudget,
-        p.probeSplitBits)
-    memo.getOrCompute(sess, key) {
-      cacheDir match {
-        case Some(root) =>
-          val (nVecs, digest) = FrameDiskCache.countAndDigest(df, idCol)
-          FrameDiskCache.loadOrCompute(sess, root, key, nVecs,
-            "pairs.parquet", Some(digest)) {
-            compute()
-          }
-        case None => compute().localCheckpoint(false)
-      }
+          p.threshold, p.targetCell, p.maxExtraBits, p.cellPairBudget,
+          p.probeSplitBits)
+        .localCheckpoint(false)
     }
-  }
 
   /** Drop every in-process entry (test isolation; bench harnesses that
     * must time computation, not reuse). */

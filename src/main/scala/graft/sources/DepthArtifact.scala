@@ -36,9 +36,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * plain paths the same live-refresh semantics with one file.
   *
   * Durability: a single JSON document (`{"depths":{"<cid>":<depth>,…}}`)
-  * written via temp-file + atomic rename (the [[graft.operators.FrameDiskCache]]
-  * commit pattern), so a concurrent reader sees the old or the new
-  * version, never a torn write. */
+  * written to a temp file beside the artifact; the old file is then
+  * deleted and the temp file renamed into place ([[write]]). A
+  * concurrent reader sees the old version or the new one, never a torn
+  * write; a read between the delete and the rename finds no file. */
 object DepthArtifact {
 
   val schema: StructType = StructType(Seq(

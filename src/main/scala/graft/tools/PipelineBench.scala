@@ -28,9 +28,7 @@ import scala.util.control.NonFatal
   *
   * Usage: SPARK_GRAFT_SF_DIR=<dir> runMain graft.tools.PipelineBench
   *          [out.json] [q1 q2 ...]
-  * Default family: d2 → d8 → d10 → x17 → x22b.
-  * Env: SPARK_GRAFT_PAIR_CACHE additionally persists the artifact to
-  * disk during the run (the cross-process design point). */
+  * Default family: d2 → d8 → d10 → x17 → x22b. */
 object PipelineBench {
   val DefaultFamily: Seq[String] = Seq(
     "d2_minhash_neardup", "d8_neardup_clusters", "d10_dedup_apply",
@@ -65,12 +63,10 @@ object PipelineBench {
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val qs = results.map { case (k, v) => f""""$k":$v%.2f""" }
       .mkString("{", ",", "}")
-    val pairMode = sys.env.get("SPARK_GRAFT_PAIR_CACHE")
-      .map(d => s"in_process_shared+disk:$d").getOrElse("in_process_shared")
     val doc =
       s"""{"metric":"pipeline_total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""order":[${names.map("\"" + _ + "\"").mkString(",")}],""" +
-        s""""pair_graph_cache":"$pairMode","n_failed":${failed.size},""" +
+        s""""pair_graph_cache":"in_process_shared","n_failed":${failed.size},""" +
         s""""failed":[${failed.map("\"" + _ + "\"").mkString(",")}],"sf":"$sfDir",""" +
         s""""mode":"pipeline single JVM, family in order, artifact shared"}"""
     println(doc)

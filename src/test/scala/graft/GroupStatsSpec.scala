@@ -106,66 +106,6 @@ class GroupStatsSpec extends SparkSuite {
     assert(GroupStats.moments(offers(), Seq("k"), "price", "test#alone") eq m)
   }
 
-  test("disk cache: a process-equivalent re-read loads the persisted " +
-      "stats table; a changed corpus row count invalidates it") {
-    val root = tempDir("groupstats")
-    GroupStats.clearInProcess()
-    val first = GroupStats.table(offers(), Seq("k"), "price", "test#disk",
-      cacheDir = Some(root)).collect().map(_.toSeq).toSet
-    val sub = new java.io.File(root).listFiles().filter(_.isDirectory)
-    assert(sub.length == 1)
-    val manifest = new java.io.File(sub.head, "manifest.json")
-    assert(manifest.exists())
-    val stamp1 = scala.io.Source.fromFile(manifest).mkString
-
-    // simulate a NEW process (the reference's two separate anomaly runs
-    // over one stats table): clear the in-process layer, read again
-    GroupStats.clearInProcess()
-    val second = GroupStats.table(offers(), Seq("k"), "price", "test#disk",
-      cacheDir = Some(root)).collect().map(_.toSeq).toSet
-    assert(second == first)
-    assert(scala.io.Source.fromFile(manifest).mkString == stamp1)
-
-    // a corpus with a different row count under the same key is STALE
-    GroupStats.clearInProcess()
-    val shrunk = offers().where(col("price") =!= 600.0)
-    val third = GroupStats.table(shrunk, Seq("k"), "price", "test#disk",
-      cacheDir = Some(root)).collect().map(_.toSeq).toSet
-    val direct = Anomaly.fullStats(shrunk, Seq("k"), "price")
-      .collect().map(_.toSeq).toSet
-    assert(third == direct && third != first)
-    assert(scala.io.Source.fromFile(manifest).mkString != stamp1)
-  }
-
-  test("moments tier consumes a persisted full-table artifact across " +
-      "processes: O(groups) projection instead of a corpus aggregation") {
-    val root = tempDir("groupstats-moments")
-    GroupStats.clearInProcess()
-    GroupStats.table(offers(), Seq("k"), "price", "test#mdisk",
-      cacheDir = Some(root))
-    // simulate the reference's SECOND anomaly process: in-process memo
-    // gone, disk artifact present
-    GroupStats.clearInProcess()
-    val m = GroupStats.moments(offers(), Seq("k"), "price", "test#mdisk",
-      cacheDir = Some(root))
-    assert(m.columns.toSeq == Seq("k", "n_offers", "s1x", "s2x"))
-    // served from the artifact: the plan is a projection over a parquet
-    // relation with the FULL table's columns (the compute fallback would
-    // be a checkpointed LogicalRDD with no quantile columns anywhere)
-    assert(m.queryExecution.optimizedPlan.toString.contains("parquet") &&
-      m.queryExecution.optimizedPlan.toString.contains("q3"),
-      "moments must project the persisted stats table")
-    val direct = Anomaly.momentStats(offers(), Seq("k"), "price")
-      .collect().map(_.toSeq).toSet
-    assert(m.collect().map(_.toSeq).toSet == direct)
-    // absent artifact AND absent full tier → plain moments aggregation
-    GroupStats.clearInProcess()
-    val alone = GroupStats.moments(offers(), Seq("k"), "price", "test#mdisk2",
-      cacheDir = Some(root))
-    assert(!alone.queryExecution.optimizedPlan.toString.contains("parquet"))
-    assert(alone.collect().map(_.toSeq).toSet == direct)
-  }
-
   test("fullStatsApprox: identical moments/extrema, discrete in-group " +
       "quartiles — the mega-group escape hatch's contract") {
     val exact = Anomaly.fullStats(offers(), Seq("k"), "price")

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** An operator's plan is chosen by its inputs alone: no code under
   * `operators/` or `functions/` reads a JVM property or an environment
-  * variable, except the deployment settings listed here (artifact cache
-  * roots and the enrichment service address). */
+  * variable, except the deployment setting listed here (the enrichment
+  * service address). */
 class OperatorSwitchGuardSpec extends AnyFunSuite {
 
   private val roots = Seq("operators", "functions")
@@ -15,14 +15,6 @@ class OperatorSwitchGuardSpec extends AnyFunSuite {
 
   /** (file name, trimmed source line) of every permitted read. */
   private val allowed = Seq(
-    "PairGraph.scala" ->
-      """cacheDir: Option[String] = sys.env.get("SPARK_GRAFT_PAIR_CACHE"))""",
-    "SemanticPairGraph.scala" ->
-      """cacheDir: Option[String] = sys.env.get("SPARK_GRAFT_PAIR_CACHE"))""",
-    "GroupStats.scala" ->
-      """cacheDir: Option[String] = sys.env.get("SPARK_GRAFT_STATS_CACHE"))""",
-    "GroupStats.scala" ->
-      """cacheDir: Option[String] = sys.env.get("SPARK_GRAFT_STATS_CACHE"))""",
     "LlmEnrich.scala" ->
       """def transportFromEnv(env: Map[String, String] = sys.env): Transport =""")
 
